@@ -16,7 +16,9 @@ Three strategies:
     queries probe their ``n_probe`` nearest cells. Data-adaptive: on
     clustered embeddings (the realistic case) cells follow the density
     and recall beats data-independent LSH at equal probe cost. Needs the
-    training pass LSH doesn't.
+    training pass LSH doesn't. The fit is a function of the rows and
+    the seed alone: it does not depend on the host's core count or on
+    the input's partition layout.
 
 Embedding-cosine near-dup (corpus self-join) reuses the LSH buckets.
 """
@@ -35,6 +37,7 @@ from pyspark_data_engineering_assignment_spark.functions.vectors import (
     dot,
     l2_norm,
 )
+from pyspark_data_engineering_assignment_spark.operators.sampling import hash_bucket
 
 
 def brute_force_topk(
@@ -313,6 +316,15 @@ def build_ivf_index(
     2. assign every corpus vector to its nearest cell (one ml transform,
        distributed).
 
+    The fit is independent of core count and partition layout. The
+    sample keeps a row when a hash of its id and ``seed`` falls under
+    ``train_fraction`` (``DataFrame.sample`` draws one RNG per
+    partition); rows with a NULL id are not sampled. The training rows
+    then go to ONE partition in ``(id_col, vec_col)`` order, because
+    k-means|| initialisation seeds one RNG per partition and reads rows
+    in partition order. So the fit runs in a single task, and
+    ``train_fraction`` is what bounds its cost at scale.
+
     Returns ``(centroids, assigned)``: centroids is (cell, centroid
     array<double>) - n_cells rows, metadata-sized; assigned is
     (neighbor_id, cvec, cell, _cn) - the cell-partitioned corpus with
@@ -327,9 +339,20 @@ def build_ivf_index(
 
     spark = corpus.sparkSession
     to_vec = array_to_vector(F.col(vec_col).cast("array<double>"))
-    train = corpus.select(to_vec.alias("features"))
+    train = corpus.select(id_col, vec_col)
     if train_fraction:
-        train = train.sample(train_fraction, seed=seed)
+        # Bernoulli keep keyed on the row's id: the same rows are kept
+        # whatever the layout (DataFrame.sample draws per partition).
+        buckets = 1 << 20
+        bucket = hash_bucket(F.col(id_col), buckets, salt=f"ivf-train-{seed}")
+        train = train.filter(bucket < train_fraction * buckets)
+    # k-means|| seeds one RNG per partition and reads rows in partition
+    # order, so the fit sees one partition in a fixed row order.
+    train = (
+        train.repartition(1)
+        .sortWithinPartitions(id_col, vec_col)
+        .select(to_vec.alias("features"))
+    )
     model = KMeans(
         k=n_cells, seed=seed, featuresCol="features", maxIter=max_iter
     ).fit(train)

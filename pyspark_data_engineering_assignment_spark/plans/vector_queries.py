@@ -448,7 +448,10 @@ def embedding_neardup_fixedplane(spark: SparkSession, sf_dir: str) -> DataFrame:
     "centroids (train_fraction=0.2 at bench SF): coarse quantization "
     "needs density-following cells, not a converged fit, so the k-means "
     "pass must never scan the full corpus - at 100 TB you'd set the "
-    "fraction to yield ~1e6 training vectors.",
+    "fraction to yield ~1e6 training vectors. The fit is independent of "
+    "core count and partition layout: the sample is a hash of the vector "
+    "id, and the fit reads one id-ordered partition in a single task, so "
+    "train_fraction is what bounds its cost at scale.",
 )
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark_data_engineering_assignment_spark.operators.similarity import ivf_topk
