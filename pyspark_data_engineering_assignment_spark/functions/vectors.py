@@ -27,6 +27,17 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
+def dot_sql(a: str, b: str) -> str:
+    """``dot`` as SQL text over two SQL expressions: the same casts and
+    the same sequential fold, for an expression written as one SQL
+    string (one parse, instead of a py4j round trip per lambda)."""
+    return (
+        f"aggregate(zip_with({a}, {b}, "
+        "(_x, _y) -> CAST(_x AS DOUBLE) * CAST(_y AS DOUBLE)), "
+        "0D, (_acc, _v) -> _acc + _v)"
+    )
+
+
 def l2_norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 

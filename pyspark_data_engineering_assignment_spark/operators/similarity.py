@@ -25,6 +25,7 @@ Embedding-cosine near-dup (corpus self-join) reuses the LSH buckets.
 
 from __future__ import annotations
 
+import json
 import math
 import random
 
@@ -35,6 +36,7 @@ from pyspark_data_engineering_assignment_spark.functions.guards import valid_vec
 
 from pyspark_data_engineering_assignment_spark.functions.vectors import (
     dot,
+    dot_sql,
     l2_norm,
 )
 from pyspark_data_engineering_assignment_spark.operators.sampling import hash_bucket
@@ -186,16 +188,22 @@ def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     return [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_planes)]
 
 
-def _rh_signature(vec_col, planes: list[list[float]]):
-    """Random-hyperplane LSH signature as one packed long per vector."""
-    sig = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        plane_col = F.array(*[F.lit(x) for x in plane])
-        bit = F.when(dot(F.col(vec_col), plane_col) > 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        sig = sig + bit * F.lit(2**i).cast("long")
-    return sig
+def _rh_signature(vec_col: str, planes: list[list[float]]):
+    """Random-hyperplane LSH signature as one packed long per vector:
+    bit i is set when the sequential-fold dot with plane i is > 0.
+
+    One SQL expression over ONE ``array<array<double>>`` literal of the
+    planes (``from_json`` of the JSON-dumped floats, which round-trip
+    exactly; the optimizer folds it to a Literal), so the expression
+    tree the analyzer walks does not grow with planes x dim. A NULL dot
+    (NULL or ragged vector, NULL element) leaves its bit clear; a NaN
+    dot sets it (NaN > 0 under Spark's NaN-is-greatest ordering)."""
+    planes_lit = f"from_json('{json.dumps(planes)}', 'array<array<double>>')"
+    bit = f"IF({dot_sql(f'`{vec_col}`', '_plane')} > 0, shiftleft(1L, _i), 0L)"
+    return F.expr(
+        f"aggregate(transform({planes_lit}, (_plane, _i) -> {bit}), "
+        "0L, (_sig, _b) -> _sig + _b)"
+    )
 
 
 def _probe_buckets(sig, n_planes: int, probe_bits: int):

@@ -50,7 +50,13 @@ class QuerySpec:
     50 registry entries, so when the oracle-bearing set outgrew 50 the
     most operator-redundant queries moved their SQL here. They keep the
     full rows+schema+value-hash check in tests/test_oracle_parity.py;
-    only the driver-side slot is ceded to a non-redundant query."""
+    only the driver-side slot is ceded to a non-redundant query.
+
+    ``fn`` must be safe to call from several threads at once on one
+    session (the parity gates build queries on a thread pool): it
+    shares no mutable session state - no fixed-name temp views, no conf
+    it sets and later restores - and any process-level cache it reaches
+    is thread-safe and keyed by session."""
 
     fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None
@@ -2550,9 +2556,10 @@ def events_props_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
     "priority_order_counts_sql",
     None,
     doc="TPC-H Q4 shape through the SQL FRONT END: the registry's one "
-    "query declared as raw Spark SQL over temp views (every other "
-    "entry uses the DataFrame API; both compile to the same Catalyst "
-    "plans, and an engine user must be able to bring plain SQL). The "
+    "query declared as raw Spark SQL over named DataFrame arguments "
+    "(every other entry uses the DataFrame API; both compile to the "
+    "same Catalyst plans, and an engine user must be able to bring "
+    "plain SQL). The "
     "correlated EXISTS is the interesting part: Catalyst rewrites it "
     "to a left-semi join on l_orderkey with the correlated "
     "l_shipdate > o_orderdate predicate as the join condition - no "
@@ -2571,19 +2578,21 @@ def events_props_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def priority_order_counts_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("sqlv_orders")
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("sqlv_lineitem")
+    # named DataFrame arguments, not session temp views: a fixed view
+    # name would be shared by every concurrent build in the session
     return spark.sql(
         """
         SELECT o_orderpriority, count(*) AS order_count
-        FROM sqlv_orders o
+        FROM {orders} o
         WHERE o.o_orderdate >= TIMESTAMP '1996-01-01'
           AND o.o_orderdate <  TIMESTAMP '1996-04-01'
-          AND EXISTS (SELECT 1 FROM sqlv_lineitem l
+          AND EXISTS (SELECT 1 FROM {lineitem} l
                       WHERE l.l_orderkey = o.o_orderkey
                         AND l.l_shipdate > o.o_orderdate)
         GROUP BY o_orderpriority
-        """
+        """,
+        orders=_t(spark, sf_dir, "orders"),
+        lineitem=_t(spark, sf_dir, "lineitem"),
     )
 
 

@@ -7,10 +7,16 @@ documents embeddings - one parquet file per table under an sf dir.
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, TimestampNTZType, TimestampType
+from pyspark.sql.types import (
+    LongType,
+    StructType,
+    TimestampNTZType,
+    TimestampType,
+)
 
 from pyspark_data_engineering_assignment_spark.session import ensure_session_confs
 
@@ -85,7 +91,86 @@ def load_table(
             load_table(spark, sf_dir, name),
             f"{sf_dir}/{name}.parquet",
         )
-    return _normalize_timestamps(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
+    return _read_parquet(spark, f"{sf_dir}/{name}.parquet")
+
+
+# SQL confs whose values change the schema parquet inference produces.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+)
+# Inferred schemas, keyed by _schema_key. Process-level and shared by
+# every thread that builds plans, so all access holds the lock.
+_SCHEMA_MEMO: dict[tuple, StructType] = {}
+_SCHEMA_MEMO_LOCK = threading.Lock()
+_SCHEMA_MEMO_MAX = 512
+
+
+def _file_identity(path: str) -> tuple | None:
+    """(relative name, inode, size, mtime_ns) of every file under
+    ``path`` (a file, or a directory of part files), or None when it is
+    not a local path. A file rewritten in place changes its identity,
+    even when it keeps its name. Files Spark does not read (``_SUCCESS``,
+    checksums) are included too: they can only cause a re-inference."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not os.path.isdir(path):
+        return (("", st.st_ino, st.st_size, st.st_mtime_ns),)
+    files = []
+    for root, dirs, names in os.walk(path):
+        dirs.sort()
+        for n in sorted(names):
+            full = os.path.join(root, n)
+            try:
+                fst = os.stat(full)
+            except OSError:
+                return None
+            files.append(
+                (os.path.relpath(full, path), fst.st_ino, fst.st_size, fst.st_mtime_ns)
+            )
+    return tuple(files)
+
+
+def _schema_key(spark: SparkSession, path: str) -> tuple | None:
+    files = _file_identity(path)
+    if files is None:
+        return None
+    return (
+        spark._jsparkSession.sessionUUID(),
+        os.path.abspath(path),
+        files,
+        tuple(spark.conf.get(k, None) for k in _INFERENCE_CONFS),
+    )
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, timestamp-normalized, inferring the
+    schema only on the first read of each file version in a session.
+
+    Inference launches a Spark job that reads the footers; a later read
+    of the same files under the same inference confs passes the
+    recorded schema instead. Every call still builds a fresh DataFrame
+    over a fresh file listing: only the schema is reused, never data.
+    """
+    key = _schema_key(spark, path)
+    with _SCHEMA_MEMO_LOCK:
+        schema = _SCHEMA_MEMO.get(key) if key is not None else None
+    if schema is not None:
+        return _normalize_timestamps(spark.read.schema(schema).parquet(path), schema)
+    df = spark.read.parquet(path)
+    schema = df.schema
+    if key is not None:
+        with _SCHEMA_MEMO_LOCK:
+            if len(_SCHEMA_MEMO) >= _SCHEMA_MEMO_MAX:
+                _SCHEMA_MEMO.pop(next(iter(_SCHEMA_MEMO)))
+            _SCHEMA_MEMO[key] = schema
+    return _normalize_timestamps(df, schema)
 
 
 # Columns the generator stores as parquet timestamps. The driver has
@@ -95,7 +180,7 @@ def load_table(
 _TS_COLUMNS = frozenset({"ts", "o_orderdate", "l_shipdate"})
 
 
-def _normalize_timestamps(df: DataFrame) -> DataFrame:
+def _normalize_timestamps(df: DataFrame, schema: StructType) -> DataFrame:
     """Normalize known timestamp columns to TIMESTAMP (LTZ; session tz is
     pinned UTC by ensure_session_confs) across every physical encoding
     the generator has used:
@@ -110,7 +195,7 @@ def _normalize_timestamps(df: DataFrame) -> DataFrame:
         oracle sees).
       * TIMESTAMP(MICROS, adjusted) -> already LTZ; untouched.
     """
-    for field in df.schema.fields:
+    for field in schema.fields:
         if field.name not in _TS_COLUMNS:
             continue
         if isinstance(field.dataType, LongType):

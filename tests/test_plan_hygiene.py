@@ -664,6 +664,18 @@ def test_sql_exists_becomes_semi_join(plans):
     )
 
 
+def test_sql_front_end_leaves_no_session_view(spark):
+    """priority_order_counts_sql binds its tables as named DataFrame
+    arguments: building it leaves the session's temp views as they
+    were, so concurrent builds cannot see each other's tables."""
+    def views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    before = views()
+    QUERIES["priority_order_counts_sql"].fn(spark, SF)
+    assert views() == before
+
+
 def test_scd2_windows_share_one_exchange(simple_plans):
     """user_status_scd2: both window passes key on user_id - the second
     must reuse the first's exchange (one hash partitioning total; a

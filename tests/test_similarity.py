@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import math
 import random
+import struct
 
 import pytest
 from pyspark.sql import functions as F
@@ -318,6 +319,79 @@ def test_recommended_n_planes_tracks_corpus_size():
     # degenerate empty-corpus default agrees with the general lower
     # clamp AND with recommended_n_planes's degenerate return
     assert recommended_band_bits(0) == 4 == recommended_n_planes(0)
+
+
+def _f32(x):
+    return None if x is None else struct.unpack("f", struct.pack("f", x))[0]
+
+
+def _python_signature(vec, planes) -> int:
+    """Reference signature: per plane a plain-Python sequential left
+    fold of float64 products from 0.0, with Spark's semantics at the
+    edges - a NULL vector, NULL element or length mismatch (zip_with
+    pads with NULL) makes the dot NULL and leaves the bit clear; a NaN
+    dot sets it (NaN sorts above every number)."""
+    sig = 0
+    for i, plane in enumerate(planes):
+        if vec is None or len(vec) != len(plane) or any(x is None for x in vec):
+            continue
+        acc = 0.0
+        for x, p in zip(vec, plane):
+            acc = acc + _f32(x) * p
+        if math.isnan(acc) or acc > 0:
+            sig += 1 << i
+    return sig
+
+
+def test_rh_signature_matches_python_fold_bit_for_bit(spark):
+    """The packed signature equals a plain-Python fold for random
+    vectors and for every degenerate vector shape."""
+    from pyspark_data_engineering_assignment_spark.operators.similarity import (
+        _hyperplanes,
+        _rh_signature,
+    )
+
+    planes = _hyperplanes(DIM, 20, seed=42)
+    rows = _vectors()
+    half = [0.5] * DIM
+    rows += [
+        (1000, None),  # NULL vector
+        (1001, half[:3] + [float("nan")] + half[4:]),  # NaN element
+        (1002, half[:3] + [None] + half[4:]),  # NULL element
+        (1003, half[: DIM - 4]),  # ragged (short)
+        (1004, [0.0] * DIM),  # zero vector
+        (1005, [-0.0] * DIM),
+    ]
+    df = spark.createDataFrame(rows, EMB_SCHEMA)
+    got = {
+        r["vec_id"]: r["sig"]
+        for r in df.select("vec_id", _rh_signature("embedding", planes).alias("sig")).collect()
+    }
+    want = {i: _python_signature(v, planes) for i, v in rows}
+    assert got == want
+    assert want[1001] == (1 << len(planes)) - 1
+    assert want[1000] == want[1002] == want[1003] == want[1004] == 0
+    # the random vectors exercise every bit, both ways
+    assert len({want[i] for i in range(N_CORPUS)}) > N_CORPUS // 2
+
+
+def test_rh_signature_plan_holds_planes_as_one_literal(spark, emb):
+    """All planes reach the optimized plan as ONE folded array literal
+    inside one transform - not one literal and one CASE WHEN per plane
+    (whose analysis dominated the LSH queries' build time)."""
+    from pyspark_data_engineering_assignment_spark.operators.similarity import (
+        _hyperplanes,
+        _rh_signature,
+    )
+
+    n_planes = 16
+    planes = _hyperplanes(DIM, n_planes, seed=42)
+    df = emb.select(_rh_signature("embedding", planes).alias("sig"))
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert "from_json" not in plan, plan
+    assert plan.count("transform([[") == 1, plan
+    assert "CASE WHEN" not in plan, plan
+    assert f"{planes[-1][-1]}]]" in plan, plan
 
 
 def test_probe_ivf_query_side_carries_no_broadcast_hint(spark, emb):
