@@ -380,15 +380,16 @@ def revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "order_enrichment",
-    """
+    None,
+    doc="J1 enrichment shape (Mechanism Y.py:221): left-outer dimension "
+    "join with null-safe coalesce (P6/P7).",
+    local_oracle="""
     SELECT o.o_orderkey, o.o_custkey,
            coalesce(c.c_name, 'UNKNOWN') AS customer_name,
            coalesce(c.c_mktsegment, 'UNKNOWN') AS segment,
            o.o_totalprice
     FROM orders o LEFT JOIN customer c ON o.o_custkey = c.c_custkey
     """,
-    doc="J1 enrichment shape (Mechanism Y.py:221): left-outer dimension "
-    "join with null-safe coalesce (P6/P7).",
 )
 def order_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
@@ -404,14 +405,15 @@ def order_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "customers_without_big_orders",
-    """
+    None,
+    doc="Anti join (survey §2.4 extension of J2/J3 semi-join semantics).",
+    local_oracle="""
     SELECT c_custkey, c_name
     FROM customer c
     WHERE NOT EXISTS (SELECT 1 FROM orders o
                       WHERE o.o_custkey = c.c_custkey
                         AND o.o_totalprice > 300000)
     """,
-    doc="Anti join (survey §2.4 extension of J2/J3 semi-join semantics).",
 )
 def customers_without_big_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer")
@@ -423,13 +425,14 @@ def customers_without_big_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "suppliers_with_shipments",
-    """
+    None,
+    doc="Left-semi join - the idiomatic form of the reference's "
+    "inner-join-then-project (survey §2.4).",
+    local_oracle="""
     SELECT s_suppkey, s_name
     FROM supplier s
     WHERE EXISTS (SELECT 1 FROM lineitem l WHERE l.l_suppkey = s.s_suppkey)
     """,
-    doc="Left-semi join - the idiomatic form of the reference's "
-    "inner-join-then-project (survey §2.4).",
 )
 def suppliers_with_shipments(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = _t(spark, sf_dir, "supplier")
@@ -467,7 +470,9 @@ def returnflag_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "top_orders_per_customer",
-    """
+    None,
+    doc="Window top-k per group with total ordering (tie-break on key).",
+    local_oracle="""
     SELECT o_custkey, o_orderkey, o_totalprice, rank
     FROM (
         SELECT o_custkey, o_orderkey, o_totalprice,
@@ -476,7 +481,6 @@ def returnflag_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM orders WHERE o_orderkey IS NOT NULL
     ) WHERE rank <= 3
     """,
-    doc="Window top-k per group with total ordering (tie-break on key).",
 )
 def top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     # an order missing its PRIMARY key cannot occupy a deterministic
@@ -496,12 +500,13 @@ def top_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "priority_orders_union",
-    """
+    None,
+    doc="U1 unionByName fold (Mechanism Y.py:247-258) + distinct (A6).",
+    local_oracle="""
     SELECT o_orderkey, 'HIGH_VALUE' AS tag FROM orders WHERE o_totalprice > 400000
     UNION
     SELECT o_orderkey, 'URGENT' AS tag FROM orders WHERE o_orderpriority = '1-URGENT'
     """,
-    doc="U1 unionByName fold (Mechanism Y.py:247-258) + distinct (A6).",
 )
 def priority_orders_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _t(spark, sf_dir, "orders")
@@ -516,8 +521,9 @@ def priority_orders_union(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "distinct_supplier_flags",
-    "SELECT DISTINCT l_suppkey, l_returnflag FROM lineitem",
+    None,
     doc="A6 distinct over a projected pair.",
+    local_oracle="SELECT DISTINCT l_suppkey, l_returnflag FROM lineitem",
 )
 def distinct_supplier_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _t(spark, sf_dir, "lineitem").select("l_suppkey", "l_returnflag").distinct()
@@ -525,7 +531,10 @@ def distinct_supplier_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rollup_lineitem_status",
-    """
+    None,
+    doc="Rollup hierarchy aggregate (beyond reference surface, survey §2.5 "
+    "notes its absence). Quantity fixed-pointed per row -> BIGINT sum.",
+    local_oracle="""
     SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
            coalesce(l_linestatus, 'ALL') AS linestatus,
            count(*) AS n_items,
@@ -534,8 +543,6 @@ def distinct_supplier_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     GROUP BY ROLLUP(l_returnflag, l_linestatus)
     """,
-    doc="Rollup hierarchy aggregate (beyond reference surface, survey §2.5 "
-    "notes its absence). Quantity fixed-pointed per row -> BIGINT sum.",
 )
 def rollup_lineitem_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = _t(spark, sf_dir, "lineitem")
@@ -589,7 +596,12 @@ def events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_sliding_2h",
-    """
+    None,
+    doc="Sliding event-time window (2h window, 1h slide): each event lands "
+    "in two overlapping windows. Spark side is streaming/windows.py's "
+    "windowed_event_aggregate run in batch mode; the oracle materializes "
+    "both member windows per event and re-aggregates.",
+    local_oracle="""
     SELECT strftime(ws, '%Y-%m-%d %H:%M:%S') AS hour, event_type,
            count(*) AS n_events,
            CAST(sum(CAST(TRY_CAST(CASE WHEN isnan(value) THEN NULL ELSE value END AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT)
@@ -600,10 +612,6 @@ def events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM events WHERE ts IS NOT NULL)
     GROUP BY 1, 2
     """,
-    doc="Sliding event-time window (2h window, 1h slide): each event lands "
-    "in two overlapping windows. Spark side is streaming/windows.py's "
-    "windowed_event_aggregate run in batch mode; the oracle materializes "
-    "both member windows per event and re-aggregates.",
 )
 def events_sliding_2h(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark_data_engineering_assignment_spark.streaming.windows import (
@@ -717,7 +725,13 @@ def purchase_asof_click(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_value_brackets",
-    """
+    None,
+    doc="Range join (operators/rangejoin.py): events joined to containing "
+    "value brackets via interval bucketing (explode intervals to "
+    "overlapped buckets -> hash equi-join -> exact boundary filter) "
+    "instead of the quadratic theta join the oracle runs. Half-open "
+    "[lo, hi) semantics pinned by the boundary buckets.",
+    local_oracle="""
     WITH brackets(label, lo, hi) AS (
         VALUES ('micro', 0.0, 25.0), ('small', 25.0, 100.0),
                ('mid', 100.0, 250.0), ('large', 250.0, 1000.0)
@@ -728,11 +742,6 @@ def purchase_asof_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events e JOIN brackets b ON e.value >= b.lo AND e.value < b.hi
     GROUP BY 1
     """,
-    doc="Range join (operators/rangejoin.py): events joined to containing "
-    "value brackets via interval bucketing (explode intervals to "
-    "overlapped buckets -> hash equi-join -> exact boundary filter) "
-    "instead of the quadratic theta join the oracle runs. Half-open "
-    "[lo, hi) semantics pinned by the boundary buckets.",
 )
 def events_value_brackets(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark_data_engineering_assignment_spark.operators.rangejoin import (
@@ -756,7 +765,12 @@ def events_value_brackets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "events_props_json",
-    """
+    None,
+    doc="Semi-structured column handling: JSON path extraction from the "
+    "events.props string column (get_json_object / json_extract), typed "
+    "cast, aggregate. At scale the extraction is a codegen'd per-row "
+    "expression; no JSON parse crosses Python.",
+    local_oracle="""
     SELECT k_value,
            count(*) AS n_events,
            count(DISTINCT user_id) AS n_users
@@ -788,10 +802,6 @@ def events_value_brackets(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE k_value IS NOT NULL
     GROUP BY 1
     """,
-    doc="Semi-structured column handling: JSON path extraction from the "
-    "events.props string column (get_json_object / json_extract), typed "
-    "cast, aggregate. At scale the extraction is a codegen'd per-row "
-    "expression; no JSON parse crosses Python.",
 )
 def events_props_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "events")
@@ -1781,16 +1791,7 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "user_moving_spend",
-    None,
-    doc="Bounded-frame window aggregate: per-user moving sum of the "
-    "last 4 events' value, in integer cents (ROWS BETWEEN 3 PRECEDING "
-    "AND CURRENT ROW over a total (ts, event_id) order). Fixed-point "
-    "cents make the frame sum exact and order-independent, so the "
-    "moving column value-hash matches - a raw-double moving SUM would "
-    "depend on each engine's incremental frame strategy. Complements "
-    "user_running_spend (unbounded-preceding frame). Driver-window "
-    "neutral (local_oracle).",
-    local_oracle="""
+    """
     SELECT event_id, user_id,
            CAST(SUM(CAST(TRY_CAST(CASE WHEN isnan(value) THEN NULL
                                        ELSE value END AS DECIMAL(18,2))
@@ -1800,6 +1801,14 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS BIGINT) AS moving_spend_cents
     FROM events WHERE ts IS NOT NULL AND event_id IS NOT NULL
     """,
+    doc="Bounded-frame window aggregate: per-user moving sum of the "
+    "last 4 events' value, in integer cents (ROWS BETWEEN 3 PRECEDING "
+    "AND CURRENT ROW over a total (ts, event_id) order). Fixed-point "
+    "cents make the frame sum exact and order-independent, so the "
+    "moving column value-hash matches - a raw-double moving SUM would "
+    "depend on each engine's incremental frame strategy. Complements "
+    "user_running_spend (unbounded-preceding frame). Driver-window "
+    "neutral (local_oracle).",
 )
 def user_moving_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     # standard guarded cents form: round(value*100).cast(long) threw
@@ -1851,15 +1860,7 @@ def value_quantiles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "corpus_mix_weights",
-    None,
-    doc="Deterministic corpus mixing (training-mix construction): "
-    "integer per-source upsampling weights applied by explode of "
-    "sequence(1, weight) - every replica is a pure function of "
-    "(doc_id, weight), no RNG, so the mix is reproducible across "
-    "runs, engines and partitionings. Output is the post-mix "
-    "composition per source. The oracle replays the same weighted "
-    "counts arithmetically. Driver-window neutral (local_oracle).",
-    local_oracle="""
+    """
     SELECT source,
            CAST(CASE WHEN source IN ('src0', 'src1') THEN 3
                      WHEN source IN ('src2', 'src3') THEN 2
@@ -1873,6 +1874,13 @@ def value_quantiles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
                                     ELSE 1 END AS BIGINT) AS mixed_chars
     FROM documents GROUP BY 1
     """,
+    doc="Deterministic corpus mixing (training-mix construction): "
+    "integer per-source upsampling weights applied by explode of "
+    "sequence(1, weight) - every replica is a pure function of "
+    "(doc_id, weight), no RNG, so the mix is reproducible across "
+    "runs, engines and partitionings. Output is the post-mix "
+    "composition per source. The oracle replays the same weighted "
+    "counts arithmetically. Driver-window neutral (local_oracle).",
 )
 def corpus_mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
@@ -2051,18 +2059,7 @@ def user_reach_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "user_spend_anomalies",
-    None,
-    doc="Integer-exact moving-window anomaly detection - the engine's "
-    "fraud-domain take on |x - mean| > 3*sigma: per user, each event "
-    "compares against the trailing 10-event window (current row "
-    "excluded; >= 5 priors required), with the z-score test cross-"
-    "multiplied into pure integer cents arithmetic - "
-    "(x*n - sum)^2 > 9*(n*sumsq - sum^2) is EXACTLY |x-mean| > 3*std "
-    "(population), no division, no sqrt, no doubles - so the flagged "
-    "set hash-matches the oracle exactly where a floating z-score "
-    "could not. One window shuffle on user_id; per-row state is three "
-    "running frame aggregates. Driver-window neutral (local_oracle).",
-    local_oracle="""
+    """
     WITH c AS (
         -- cents must be NON-NULL, not merely value IS NOT NULL: a
         -- NaN/1e308 value survives IS NOT NULL but try_casts to NULL
@@ -2092,6 +2089,16 @@ def user_reach_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND (cents * n_prev - sum_prev) * (cents * n_prev - sum_prev)
           > 9 * (n_prev * sumsq_prev - sum_prev * sum_prev)
     """,
+    doc="Integer-exact moving-window anomaly detection - the engine's "
+    "fraud-domain take on |x - mean| > 3*sigma: per user, each event "
+    "compares against the trailing 10-event window (current row "
+    "excluded; >= 5 priors required), with the z-score test cross-"
+    "multiplied into pure integer cents arithmetic - "
+    "(x*n - sum)^2 > 9*(n*sumsq - sum^2) is EXACTLY |x-mean| > 3*std "
+    "(population), no division, no sqrt, no doubles - so the flagged "
+    "set hash-matches the oracle exactly where a floating z-score "
+    "could not. One window shuffle on user_id; per-row state is three "
+    "running frame aggregates. Driver-window neutral (local_oracle).",
 )
 def user_spend_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corrupt observations (no cents value, or unplaceable in the
@@ -2192,18 +2199,7 @@ def user_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "value_decile_profile",
-    None,
-    doc="Quantile binning for feature engineering: the per-(type, "
-    "decile) profile of ntile(10) over the total order (cents, "
-    "event_id) - the tie-break makes the standard ntile distribution "
-    "(larger buckets first) identical across engines, so the profile "
-    "is hash-exact. Round-14: computed from the (type, cents, count) "
-    "histogram via position-range overlap with the 10 bucket "
-    "boundaries instead of sorting every row in a 5-partition window "
-    "(the proof that the aggregate is tie-order-independent is in the "
-    "function comment; sf10 A/B -89%). Driver-window neutral "
-    "(local_oracle).",
-    local_oracle="""
+    """
     WITH c AS (
         SELECT event_id, event_type,
                CAST(TRY_CAST(CASE WHEN isnan(value) THEN NULL ELSE value END AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
@@ -2223,6 +2219,16 @@ def user_heavy_hitters_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
            min(cents) AS cents_min, max(cents) AS cents_max
     FROM d GROUP BY 1, 2
     """,
+    doc="Quantile binning for feature engineering: the per-(type, "
+    "decile) profile of ntile(10) over the total order (cents, "
+    "event_id) - the tie-break makes the standard ntile distribution "
+    "(larger buckets first) identical across engines, so the profile "
+    "is hash-exact. Round-14: computed from the (type, cents, count) "
+    "histogram via position-range overlap with the 10 bucket "
+    "boundaries instead of sorting every row in a 5-partition window "
+    "(the proof that the aggregate is tie-order-independent is in the "
+    "function comment; sf10 A/B -89%). Driver-window neutral "
+    "(local_oracle).",
 )
 def value_decile_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "events")
@@ -2335,18 +2341,7 @@ def events_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "customer_order_distribution",
-    None,
-    doc="TPC-H Q13 shape: the count-of-counts histogram over a FILTERED "
-    "left-outer join - how many customers placed exactly k non-urgent "
-    "orders, INCLUDING the zero-order customers the filter semantics "
-    "make visible only through the outer join (pre-filtering the fact "
-    "side then left-joining is equivalent to the ON-clause predicate "
-    "and lets the filter push into the orders scan). First aggregate "
-    "keys on c_custkey - the join's own exchange is reused, no second "
-    "shuffle - and the histogram re-agg is over at most "
-    "max-orders-per-customer distinct keys, a few dozen rows. All "
-    "integer counts, hash-exact. Driver-window neutral (local_oracle).",
-    local_oracle="""
+    """
     WITH co AS (
         SELECT c.c_custkey, count(o.o_orderkey) AS c_count
         FROM customer c
@@ -2358,6 +2353,16 @@ def events_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT c_count, count(*) AS custdist
     FROM co GROUP BY 1
     """,
+    doc="TPC-H Q13 shape: the count-of-counts histogram over a FILTERED "
+    "left-outer join - how many customers placed exactly k non-urgent "
+    "orders, INCLUDING the zero-order customers the filter semantics "
+    "make visible only through the outer join (pre-filtering the fact "
+    "side then left-joining is equivalent to the ON-clause predicate "
+    "and lets the filter push into the orders scan). First aggregate "
+    "keys on c_custkey - the join's own exchange is reused, no second "
+    "shuffle - and the histogram re-agg is over at most "
+    "max-orders-per-customer distinct keys, a few dozen rows. All "
+    "integer counts, hash-exact. Driver-window neutral (local_oracle).",
 )
 def customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer")
@@ -2376,18 +2381,7 @@ def customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "top_revenue_suppliers",
-    None,
-    doc="TPC-H Q15 shape: the argmax-over-an-aggregated-view filter - "
-    "suppliers whose quarterly revenue EQUALS the maximum quarterly "
-    "revenue, ties included. The revenue view aggregates once on "
-    "l_suppkey (shipdate filter pushed to the scan); the scalar max is "
-    "a single-row aggregate of that view cross-joined back as a "
-    "broadcast (Spark's scalar-subquery plan, written explicitly), so "
-    "the view is computed once and the equality filter never "
-    "re-shuffles it. Revenue fixed-pointed to e4 BIGINT, so the "
-    "equality compare is exact - an interpolated double max could tie-"
-    "break wrongly. Driver-window neutral (local_oracle).",
-    local_oracle="""
+    """
     WITH revenue AS (
         SELECT l_suppkey AS supplier_no,
                CAST(sum(CAST(TRY_CAST(CASE WHEN isnan(l_extendedprice) THEN NULL ELSE l_extendedprice END AS DECIMAL(18,2))
@@ -2403,6 +2397,16 @@ def customer_order_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN revenue r ON s.s_suppkey = r.supplier_no
     WHERE r.total_revenue_e4 = (SELECT max(total_revenue_e4) FROM revenue)
     """,
+    doc="TPC-H Q15 shape: the argmax-over-an-aggregated-view filter - "
+    "suppliers whose quarterly revenue EQUALS the maximum quarterly "
+    "revenue, ties included. The revenue view aggregates once on "
+    "l_suppkey (shipdate filter pushed to the scan); the scalar max is "
+    "a single-row aggregate of that view cross-joined back as a "
+    "broadcast (Spark's scalar-subquery plan, written explicitly), so "
+    "the view is computed once and the equality filter never "
+    "re-shuffles it. Revenue fixed-pointed to e4 BIGINT, so the "
+    "equality compare is exact - an interpolated double max could tie-"
+    "break wrongly. Driver-window neutral (local_oracle).",
 )
 def top_revenue_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = _t(spark, sf_dir, "lineitem")
@@ -2554,7 +2558,16 @@ def events_props_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "priority_order_counts_sql",
-    None,
+    """
+    SELECT o_orderpriority, count(*) AS order_count
+    FROM orders o
+    WHERE o.o_orderdate >= TIMESTAMP '1996-01-01'
+      AND o.o_orderdate <  TIMESTAMP '1996-04-01'
+      AND EXISTS (SELECT 1 FROM lineitem l
+                  WHERE l.l_orderkey = o.o_orderkey
+                    AND l.l_shipdate > o.o_orderdate)
+    GROUP BY 1
+    """,
     doc="TPC-H Q4 shape through the SQL FRONT END: the registry's one "
     "query declared as raw Spark SQL over named DataFrame arguments "
     "(every other entry uses the DataFrame API; both compile to the "
@@ -2566,16 +2579,6 @@ def events_props_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
     "per-row subquery execution, which is what EXISTS means at 100 TB. "
     "Date filter pushed to the orders scan. Driver-window neutral "
     "(local_oracle).",
-    local_oracle="""
-    SELECT o_orderpriority, count(*) AS order_count
-    FROM orders o
-    WHERE o.o_orderdate >= TIMESTAMP '1996-01-01'
-      AND o.o_orderdate <  TIMESTAMP '1996-04-01'
-      AND EXISTS (SELECT 1 FROM lineitem l
-                  WHERE l.l_orderkey = o.o_orderkey
-                    AND l.l_shipdate > o.o_orderdate)
-    GROUP BY 1
-    """,
 )
 def priority_order_counts_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     # named DataFrame arguments, not session temp views: a fixed view
@@ -2948,19 +2951,7 @@ def referential_integrity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "returnflag_melt_roundtrip",
-    None,
-    doc="Native unpivot (Spark 4 DataFrame.unpivot / melt): the "
-    "returnflag pivot table melted back to long form - pivot and "
-    "unpivot are inverse reshapes, so the melted rows must equal the "
-    "plain groupBy aggregation the pivot started from (minus the "
-    "fillna zeros the pivot fabricated, filtered out to make the "
-    "inverse exact - which NECESSARILY also drops real groups whose "
-    "sum is NULL or exactly 0: after fillna(0) those cells are "
-    "indistinguishable from fabricated ones; the oracle's HAVING "
-    "mirrors that inherent lossiness of the fillna-pivot roundtrip). "
-    "Covers the official wide-to-long API the expectations module "
-    "hand-rolls with stack(). Driver-window neutral (local_oracle).",
-    local_oracle="""
+    """
     SELECT l_returnflag, l_linestatus,
            CAST(sum(CAST(TRY_CAST(CASE WHEN isnan(l_quantity) THEN NULL ELSE l_quantity END AS DECIMAL(18,2)) * 100 AS BIGINT))
                 AS BIGINT) AS qty_e2
@@ -2981,6 +2972,17 @@ def referential_integrity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
        AND CAST(sum(CAST(TRY_CAST(CASE WHEN isnan(l_quantity) THEN NULL ELSE l_quantity END AS DECIMAL(18,2)) * 100 AS BIGINT)) AS BIGINT)
            <> 0
     """,
+    doc="Native unpivot (Spark 4 DataFrame.unpivot / melt): the "
+    "returnflag pivot table melted back to long form - pivot and "
+    "unpivot are inverse reshapes, so the melted rows must equal the "
+    "plain groupBy aggregation the pivot started from (minus the "
+    "fillna zeros the pivot fabricated, filtered out to make the "
+    "inverse exact - which NECESSARILY also drops real groups whose "
+    "sum is NULL or exactly 0: after fillna(0) those cells are "
+    "indistinguishable from fabricated ones; the oracle's HAVING "
+    "mirrors that inherent lossiness of the fillna-pivot roundtrip). "
+    "Covers the official wide-to-long API the expectations module "
+    "hand-rolls with stack(). Driver-window neutral (local_oracle).",
 )
 def returnflag_melt_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = _t(spark, sf_dir, "lineitem")
@@ -3109,16 +3111,7 @@ def flat_sales_export(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "value_hour_regression_stats",
-    None,
-    doc="Sufficient statistics for correlation/regression, per event "
-    "type: n, Σx, Σy, Σxy, Σx², Σy² with x = cents and y = hour of "
-    "day - ALL integer sums, so the export is hash-exact where a "
-    "float corr() could never be (engines sum doubles in different "
-    "orders). This is how distributed ML actually fits linear models: "
-    "ship order-independent integer moments in ONE aggregation pass, "
-    "derive slope/intercept/r on the driver in constant time. "
-    "Driver-window neutral (local_oracle).",
-    local_oracle="""
+    """
     WITH c AS (
         -- an observation missing EITHER coordinate must leave ALL the
         -- moments, not just the sums it is NULL in: count(*) counting
@@ -3141,6 +3134,14 @@ def flat_sales_export(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(y * y) AS BIGINT) AS sum_y2
     FROM c GROUP BY 1
     """,
+    doc="Sufficient statistics for correlation/regression, per event "
+    "type: n, Σx, Σy, Σxy, Σx², Σy² with x = cents and y = hour of "
+    "day - ALL integer sums, so the export is hash-exact where a "
+    "float corr() could never be (engines sum doubles in different "
+    "orders). This is how distributed ML actually fits linear models: "
+    "ship order-independent integer moments in ONE aggregation pass, "
+    "derive slope/intercept/r on the driver in constant time. "
+    "Driver-window neutral (local_oracle).",
 )
 def value_hour_regression_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a corrupt observation (no cents, or no timestamp -> no hour) must
@@ -3200,17 +3201,7 @@ def value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "event_burst_compaction",
-    None,
-    doc="Proximity dedup / burst compaction: repeated (user, type) "
-    "events within 5 minutes of the PREVIOUS KEPT event collapse to "
-    "their first occurrence - the telemetry compactor that turns "
-    "retry storms into single facts. Burst boundaries are "
-    "gaps-and-islands (gap > 5 min starts a burst; running sum of "
-    "boundary markers = burst id), so 'relative to last kept' - which "
-    "looks iterative - is two stacked windows on ONE (user, type) "
-    "partitioning. Output: one row per burst with its size. "
-    "Driver-window neutral (local_oracle).",
-    local_oracle="""
+    """
     WITH g AS (
         SELECT user_id, event_type, ts, event_id,
                CASE WHEN lag(ts) OVER w IS NULL
@@ -3231,6 +3222,15 @@ def value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
            count(*) AS n_collapsed
     FROM b GROUP BY 1, 2, 3
     """,
+    doc="Proximity dedup / burst compaction: repeated (user, type) "
+    "events within 5 minutes of the PREVIOUS KEPT event collapse to "
+    "their first occurrence - the telemetry compactor that turns "
+    "retry storms into single facts. Burst boundaries are "
+    "gaps-and-islands (gap > 5 min starts a burst; running sum of "
+    "boundary markers = burst id), so 'relative to last kept' - which "
+    "looks iterative - is two stacked windows on ONE (user, type) "
+    "partitioning. Output: one row per burst with its size. "
+    "Driver-window neutral (local_oracle).",
 )
 def event_burst_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no timestamp, no burst position (engine NULL ordering diverges)
@@ -3680,7 +3680,14 @@ def nation_region_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "activity_dow_hour_heatmap",
-    None,
+    """
+    SELECT CAST(isodow(ts) - 1 AS BIGINT) AS dow_mon0,
+           CAST(hour(ts) AS BIGINT) AS hour,
+           count(*) AS n_events,
+           CAST(sum(CAST(TRY_CAST(CASE WHEN isnan(value) THEN NULL ELSE value END AS DECIMAL(18,2)) * 100 AS BIGINT))
+                AS BIGINT) AS cents
+    FROM events GROUP BY 1, 2
+    """,
     doc="Calendar seasonality profile: activity and cents by (ISO "
     "day-of-week, hour) - the load-shape heatmap capacity planning "
     "reads before sizing a cluster's autoscaling bands. dayofweek is "
@@ -3690,14 +3697,6 @@ def nation_region_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     "convention mismatch every cross-engine calendar query must pick "
     "a side on explicitly. One hash-agg to <= 168 rows. "
     "Driver-window neutral (local_oracle).",
-    local_oracle="""
-    SELECT CAST(isodow(ts) - 1 AS BIGINT) AS dow_mon0,
-           CAST(hour(ts) AS BIGINT) AS hour,
-           count(*) AS n_events,
-           CAST(sum(CAST(TRY_CAST(CASE WHEN isnan(value) THEN NULL ELSE value END AS DECIMAL(18,2)) * 100 AS BIGINT))
-                AS BIGINT) AS cents
-    FROM events GROUP BY 1, 2
-    """,
 )
 def activity_dow_hour_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "events")
@@ -3718,16 +3717,7 @@ def activity_dow_hour_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "null_safe_category_join",
-    None,
-    doc="Null-safe equality join (<=> / IS NOT DISTINCT FROM): error "
-    "events get a NULL category (nullif), and the join to the "
-    "category reference STILL matches the NULL row to the reference's "
-    "NULL entry - the semantics a plain equi-join silently drops "
-    "(NULL = NULL is NULL, and at 100 TB those dropped rows are an "
-    "unnoticed data loss, not an error). EqualNullSafe keys also "
-    "hash-partition normally, so the plan is a standard broadcast "
-    "join, not a nested loop. Driver-window neutral (local_oracle).",
-    local_oracle="""
+    """
     WITH cat AS (
         SELECT nullif(event_type, 'error') AS category, count(*) AS n_events
         FROM events GROUP BY 1
@@ -3740,6 +3730,14 @@ def activity_dow_hour_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT cat.category, cat.n_events, CAST(ref.weight AS BIGINT) AS weight
     FROM cat JOIN ref ON cat.category IS NOT DISTINCT FROM ref.category
     """,
+    doc="Null-safe equality join (<=> / IS NOT DISTINCT FROM): error "
+    "events get a NULL category (nullif), and the join to the "
+    "category reference STILL matches the NULL row to the reference's "
+    "NULL entry - the semantics a plain equi-join silently drops "
+    "(NULL = NULL is NULL, and at 100 TB those dropped rows are an "
+    "unnoticed data loss, not an error). EqualNullSafe keys also "
+    "hash-partition normally, so the plan is a standard broadcast "
+    "join, not a nested loop. Driver-window neutral (local_oracle).",
 )
 def null_safe_category_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _t(spark, sf_dir, "events")

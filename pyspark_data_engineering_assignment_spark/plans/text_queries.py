@@ -191,14 +191,15 @@ def lang_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "token_frequency",
-    """
+    None,
+    doc="Corpus token frequency: explode + two-level count (count + "
+    "count distinct in one hash agg).",
+    local_oracle="""
     SELECT tok, count(*) AS n_occurrences, count(DISTINCT doc_id) AS n_docs
     FROM (SELECT doc_id, unnest(string_split(trim(text, ' '), ' ')) AS tok
           FROM documents)
     GROUP BY 1
     """,
-    doc="Corpus token frequency: explode + two-level count (count + "
-    "count distinct in one hash agg).",
 )
 def token_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
@@ -214,7 +215,10 @@ def token_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "text_quality",
-    """
+    None,
+    doc="Quality scoring: length + token-count + type-token-ratio gate, "
+    "all integer arithmetic.",
+    local_oracle="""
     SELECT doc_id,
            n_chars,
            len(string_split(trim(text, ' '), ' ')) AS n_tokens,
@@ -226,8 +230,6 @@ def token_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
                 THEN 1 ELSE 0 END AS is_high_quality
     FROM documents
     """,
-    doc="Quality scoring: length + token-count + type-token-ratio gate, "
-    "all integer arithmetic.",
 )
 def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
@@ -726,7 +728,14 @@ def doc_quality_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "media_byte_histogram",
-    """
+    None,
+    doc="Multimodal feature core, oracle-checked exactly: byte histogram "
+    "folded to 16 buckets, computed by the numpy-vectorized mapInPandas "
+    "operator (operators/multimodal.py byte_histogram) and re-derived in "
+    "the oracle by hex-decoding every payload byte in SQL. Zero-count "
+    "buckets dropped on both sides. extract_features is this histogram "
+    "normalized to float32 (tests/test_multimodal.py).",
+    local_oracle="""
     WITH b AS (
         -- doc_id IS NOT NULL mirrors documents_as_media's media_id
         -- contract (id-less media is unattributable; Spark's declared
@@ -746,12 +755,6 @@ def doc_quality_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT media_id, n_bytes, bucket, count(*) AS n
     FROM bytes GROUP BY 1, 2, 3
     """,
-    doc="Multimodal feature core, oracle-checked exactly: byte histogram "
-    "folded to 16 buckets, computed by the numpy-vectorized mapInPandas "
-    "operator (operators/multimodal.py byte_histogram) and re-derived in "
-    "the oracle by hex-decoding every payload byte in SQL. Zero-count "
-    "buckets dropped on both sides. extract_features is this histogram "
-    "normalized to float32 (tests/test_multimodal.py).",
 )
 def media_byte_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "documents")
@@ -791,7 +794,17 @@ def doc_bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_winnowing",
-    """
+    None,
+    doc="Winnowing fingerprints (MOSS algorithm, functions/text.py): "
+    "3-gram md5 hashes, sliding window of 4, per-window minimum, dedup, "
+    "sort. Local edits disturb only nearby windows - the rolling-hash "
+    "fingerprint for partial-overlap detection. md5-hex ordering keeps "
+    "both engines bit-identical (neither shares an integer hash fn). "
+    "Fingerprints are emitted as a space-joined string (the array is "
+    "already sorted, so the join is deterministic) because the driver's "
+    "cross-engine canonicalizer sorts rows with pandas and cannot hash "
+    "an array<string> column.",
+    local_oracle="""
     WITH g AS (
         SELECT doc_id, string_split(trim(text, ' '), ' ') AS toks FROM documents
     ),
@@ -823,15 +836,6 @@ def doc_bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
            len(fp) AS n_fingerprints
     FROM f
     """,
-    doc="Winnowing fingerprints (MOSS algorithm, functions/text.py): "
-    "3-gram md5 hashes, sliding window of 4, per-window minimum, dedup, "
-    "sort. Local edits disturb only nearby windows - the rolling-hash "
-    "fingerprint for partial-overlap detection. md5-hex ordering keeps "
-    "both engines bit-identical (neither shares an integer hash fn). "
-    "Fingerprints are emitted as a space-joined string (the array is "
-    "already sorted, so the join is deterministic) because the driver's "
-    "cross-engine canonicalizer sorts rows with pandas and cannot hash "
-    "an array<string> column.",
 )
 def doc_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark_data_engineering_assignment_spark.functions.text import (
@@ -934,7 +938,14 @@ _SIZE_RE = r"\b(big|small|fast|slow)\b"
 
 @register(
     "doc_token_scrub",
-    """
+    None,
+    doc="Pattern scrubbing / redaction pipeline (functions.text.scrub): "
+    "chained regexp_replace + regexp_count per class, aggregated per "
+    "source - the shape of PII removal over a training corpus. Pure "
+    "per-row map work before one small aggregate; patterns stay in the "
+    "Java-regex/RE2 common subset so the oracle runs the SAME pattern. "
+    "The sibling redact_pii (email/phone/url) uses the same machinery.",
+    local_oracle="""
     SELECT source,
            count(*) AS n_docs,
            CAST(sum(len(regexp_extract_all(text, '\\b(spark|hash|vector)\\b')))
@@ -947,12 +958,6 @@ _SIZE_RE = r"\b(big|small|fast|slow)\b"
                 AS BIGINT) AS scrubbed_chars
     FROM documents GROUP BY 1
     """,
-    doc="Pattern scrubbing / redaction pipeline (functions.text.scrub): "
-    "chained regexp_replace + regexp_count per class, aggregated per "
-    "source - the shape of PII removal over a training corpus. Pure "
-    "per-row map work before one small aggregate; patterns stay in the "
-    "Java-regex/RE2 common subset so the oracle runs the SAME pattern. "
-    "The sibling redact_pii (email/phone/url) uses the same machinery.",
 )
 def doc_token_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark_data_engineering_assignment_spark.functions.text import (
@@ -1028,15 +1033,7 @@ def doc_split_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_stratified_take",
-    None,
-    doc="Deterministic per-stratum quota sample "
-    "(operators/sampling.stratified_take): up to 3 docs per language, "
-    "ranked by salted-hash order - the reproducible 'n examples of "
-    "every language' selection of a training-mix builder. One window "
-    "per stratum; WindowGroupLimit keeps the sort bounded by the "
-    "quota. Oracle replays the identical md5 rank in SQL. "
-    "Driver-window neutral (local_oracle).",
-    local_oracle="""
+    """
     SELECT doc_id, lang FROM (
         SELECT doc_id, lang,
                row_number() OVER (
@@ -1047,6 +1044,13 @@ def doc_split_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
                             doc_id) AS rn
         FROM documents WHERE doc_id IS NOT NULL) WHERE rn <= 3
     """,
+    doc="Deterministic per-stratum quota sample "
+    "(operators/sampling.stratified_take): up to 3 docs per language, "
+    "ranked by salted-hash order - the reproducible 'n examples of "
+    "every language' selection of a training-mix builder. One window "
+    "per stratum; WindowGroupLimit keeps the sort bounded by the "
+    "quota. Oracle replays the identical md5 rank in SQL. "
+    "Driver-window neutral (local_oracle).",
 )
 def doc_stratified_take(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark_data_engineering_assignment_spark.operators.sampling import (
@@ -1531,16 +1535,15 @@ _CHUNK_SQL = """
 
 @register(
     "doc_chunk_overlap",
-    None,
+    "WITH chunks AS (" + _CHUNK_SQL + """)
+    SELECT doc_id, chunk_idx, n_chunk_tokens, chunk_hash FROM chunks
+    """,
     doc="RAG overlap chunking: every document split into sliding "
     "32-token windows at stride 24 (8 tokens of shared context between "
     "consecutive chunks, tail remainder kept), one row per chunk with "
     "its md5 CAS key - the map-side of a retrieval-index build. Pure "
     "per-row expressions, zero shuffle; fan-out ~n_tokens/24 per doc. "
     "Driver-window neutral (local_oracle).",
-    local_oracle="WITH chunks AS (" + _CHUNK_SQL + """)
-    SELECT doc_id, chunk_idx, n_chunk_tokens, chunk_hash FROM chunks
-    """,
 )
 def doc_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark_data_engineering_assignment_spark.operators.textstats import chunk_tokens
@@ -1551,7 +1554,13 @@ def doc_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "chunk_dedup_stats",
-    None,
+    "WITH chunks AS (" + _CHUNK_SQL + """)
+    SELECT source,
+           count(*) AS n_chunks,
+           count(DISTINCT chunk_hash) AS n_distinct_chunks,
+           count(*) - count(DISTINCT chunk_hash) AS n_dup_chunks
+    FROM chunks GROUP BY 1
+    """,
     doc="Chunk-level CAS dedup ratio per source: total vs distinct "
     "chunk hashes from the overlap chunker - the content-addressable-"
     "storage question ('how much of this source is repeated chunks?') "
@@ -1559,13 +1568,6 @@ def doc_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     "shuffle: partial per-partition distinct-agg on (source, "
     "chunk_hash) then the per-source rollup; never materializes the "
     "chunk list. Driver-window neutral (local_oracle).",
-    local_oracle="WITH chunks AS (" + _CHUNK_SQL + """)
-    SELECT source,
-           count(*) AS n_chunks,
-           count(DISTINCT chunk_hash) AS n_distinct_chunks,
-           count(*) - count(DISTINCT chunk_hash) AS n_dup_chunks
-    FROM chunks GROUP BY 1
-    """,
 )
 def chunk_dedup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark_data_engineering_assignment_spark.operators.textstats import chunk_tokens
@@ -1636,18 +1638,7 @@ def doc_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_length_batching",
-    None,
-    doc="Length-bucketed inference batching: docs sorted by token count "
-    "(desc, doc_id tie-break) WITHIN each source shard, grouped into "
-    "batches of 16, each batch reporting its padding waste "
-    "(n_docs*max_tokens - sum_tokens) - the padding-minimizing batcher "
-    "every batched-inference pipeline runs before the GPU. The window "
-    "is PARTITIONED by source, never global: at 100 TB a total-order "
-    "sort is the classic single-reducer trap; per-shard sorted "
-    "batching is what serving systems actually do, and the waste "
-    "metric is identical. All integers, hash-exact. Driver-window "
-    "neutral (local_oracle).",
-    local_oracle="""
+    """
     WITH t AS (
         -- an id-less doc has no deterministic rank slot: at an
         -- n_tokens tie the NULL tie-break sorts first in Spark, last
@@ -1672,6 +1663,16 @@ def doc_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS padding_waste
     FROM b GROUP BY 1, 2
     """,
+    doc="Length-bucketed inference batching: docs sorted by token count "
+    "(desc, doc_id tie-break) WITHIN each source shard, grouped into "
+    "batches of 16, each batch reporting its padding waste "
+    "(n_docs*max_tokens - sum_tokens) - the padding-minimizing batcher "
+    "every batched-inference pipeline runs before the GPU. The window "
+    "is PARTITIONED by source, never global: at 100 TB a total-order "
+    "sort is the classic single-reducer trap; per-shard sorted "
+    "batching is what serving systems actually do, and the waste "
+    "metric is identical. All integers, hash-exact. Driver-window "
+    "neutral (local_oracle).",
 )
 def doc_length_batching(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -1892,7 +1893,15 @@ def doc_prefix_editdist_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "dedup_exact_nfc",
-    None,
+    """
+    SELECT fingerprint, count(*) AS n_docs, min(doc_id) AS keeper_id
+    FROM (SELECT doc_id,
+                 md5(translate(trim(nfc_normalize(text), ' '),
+                     'ABCDEFGHIJKLMNOPQRSTUVWXYZ',
+                     'abcdefghijklmnopqrstuvwxyz')) AS fingerprint
+          FROM documents)
+    GROUP BY 1
+    """,
     doc="NFC-normalized exact dedup - the explicit normalization pass "
     "md5_fingerprint deliberately omits (functions/text.py): composed "
     "and decomposed spellings of the same word (U+00E9 vs e+U+0301) "
@@ -1905,15 +1914,6 @@ def doc_prefix_editdist_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     "on decomposed accents, combining dakuten, ligatures and astral "
     "plane (round-11 unicode sweep, which also runs THIS query over "
     "the hazard corpus). Driver-window neutral (local_oracle).",
-    local_oracle="""
-    SELECT fingerprint, count(*) AS n_docs, min(doc_id) AS keeper_id
-    FROM (SELECT doc_id,
-                 md5(translate(trim(nfc_normalize(text), ' '),
-                     'ABCDEFGHIJKLMNOPQRSTUVWXYZ',
-                     'abcdefghijklmnopqrstuvwxyz')) AS fingerprint
-          FROM documents)
-    GROUP BY 1
-    """,
 )
 def dedup_exact_nfc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark_data_engineering_assignment_spark.functions.text import (

@@ -158,7 +158,16 @@ def embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "label_centroid_dims",
-    """
+    None,
+    doc="Per-label centroid ingredients - the aggregation shape of "
+    "k-means/IVF coarse quantization. Components are fixed-pointed "
+    "(floor(x*1e8), exact element-wise IEEE ops) so the sum is integer "
+    "arithmetic, order-independent across engines. Corrupt vectors "
+    "(NULL, NaN element, NULL element) are excluded on BOTH sides: a "
+    "NaN dim would fix-point to 0 in Spark (measured, even under ANSI) "
+    "but crash DuckDB's NaN->BIGINT cast, and either way a corrupt row "
+    "must not count toward a label's centroid.",
+    local_oracle="""
     SELECT label, count(*) AS n_vectors,
            CAST(sum(CAST(floor(CAST(embedding[1] AS DOUBLE) * 100000000) AS BIGINT))
                 AS BIGINT) AS sum_dim1_e8,
@@ -172,14 +181,6 @@ def embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
               x -> x IS NULL), true)
     GROUP BY 1
     """,
-    doc="Per-label centroid ingredients - the aggregation shape of "
-    "k-means/IVF coarse quantization. Components are fixed-pointed "
-    "(floor(x*1e8), exact element-wise IEEE ops) so the sum is integer "
-    "arithmetic, order-independent across engines. Corrupt vectors "
-    "(NULL, NaN element, NULL element) are excluded on BOTH sides: a "
-    "NaN dim would fix-point to 0 in Spark (measured, even under ANSI) "
-    "but crash DuckDB's NaN->BIGINT cast, and either way a corrupt row "
-    "must not count toward a label's centroid.",
 )
 def label_centroid_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _t(spark, sf_dir, "embeddings").filter(valid_vector("embedding"))
@@ -909,7 +910,18 @@ def conversion_lag_stats_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "embedding_quantization_error",
-    """
+    None,
+    doc="Symmetric int8 scalar quantization quality report per label "
+    "(functions.vectors.int8_scale/int8_recon_err2_e12): the compression "
+    "step an embedding store runs before ANN serving, with its "
+    "reconstruction error surfaced as fixed-point integers. Every "
+    "lossy step is elementwise IEEE double math (floor(x*scale+0.5) "
+    "round-half-up in both engines - round() itself disagrees on "
+    "half-even vs half-up), so the per-element floor(err^2 * 1e12) "
+    "BIGINTs aggregate order-independently and the oracle matches by "
+    "hash, not tolerance. Pure map work + one hash-agg; no shuffle "
+    "before the final label aggregate.",
+    local_oracle="""
     WITH v AS (
         -- corrupt vectors (NULL / NaN element / NULL element) are
         -- excluded on BOTH sides: in Spark a NaN error term would
@@ -949,16 +961,6 @@ def conversion_lag_stats_query(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(max(list_aggregate(errs, 'max')) AS BIGINT) AS max_err2_e12
     FROM e GROUP BY 1
     """,
-    doc="Symmetric int8 scalar quantization quality report per label "
-    "(functions.vectors.int8_scale/int8_recon_err2_e12): the compression "
-    "step an embedding store runs before ANN serving, with its "
-    "reconstruction error surfaced as fixed-point integers. Every "
-    "lossy step is elementwise IEEE double math (floor(x*scale+0.5) "
-    "round-half-up in both engines - round() itself disagrees on "
-    "half-even vs half-up), so the per-element floor(err^2 * 1e12) "
-    "BIGINTs aggregate order-independently and the oracle matches by "
-    "hash, not tolerance. Pure map work + one hash-agg; no shuffle "
-    "before the final label aggregate.",
 )
 def embedding_quantization_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark_data_engineering_assignment_spark.functions.vectors import (

@@ -1,20 +1,4 @@
+from pyspark_data_engineering_assignment_spark.state.jdbc_store import JdbcStateStore
 from pyspark_data_engineering_assignment_spark.state.store import ParquetStateStore, StateStore
 
-__all__ = ["ParquetStateStore", "StateStore", "JdbcStateStore", "DuckDBStateStore"]
-
-
-def __getattr__(name):
-    # lazy: keep duckdb import off the hot path
-    if name == "JdbcStateStore":
-        from pyspark_data_engineering_assignment_spark.state.jdbc_store import (
-            JdbcStateStore,
-        )
-
-        return JdbcStateStore
-    if name == "DuckDBStateStore":
-        from pyspark_data_engineering_assignment_spark.state.duckdb_store import (
-            DuckDBStateStore,
-        )
-
-        return DuckDBStateStore
-    raise AttributeError(name)
+__all__ = ["ParquetStateStore", "StateStore", "JdbcStateStore"]

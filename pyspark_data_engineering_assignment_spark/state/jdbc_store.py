@@ -13,11 +13,9 @@ steps (``Mechanism Y.py:147-160``, ``:169-183``, ``:188-206``):
              <counter> = <target>.<counter> + EXCLUDED.<counter>, ...
              last_updated = EXCLUDED.last_updated;
 
-``DuckDBStateStore`` preserves the UPSERT *semantics* but folds the temp
-table into a registered pandas view and the aggregation into the one
-statement. This class preserves the *protocol*: a real temp table is
-created and loaded, the emitted UPSERT is shape-identical to the
-reference statement (pinned modulo identifiers in
+This class preserves the *protocol*, not only its semantics: a real
+temp table is created and loaded, the emitted UPSERT is shape-identical
+to the reference statement (pinned modulo identifiers in
 ``tests/test_jdbc_store.py``), and the temp table is dropped afterwards.
 
 The connection is pluggable DB-API: tested with DuckDB's driver (which
@@ -36,7 +34,7 @@ settings, type OIDs, transaction-isolation defaults) are untested::
         spark, connect=lambda: psycopg2.connect(dsn), paramstyle="format"
     )
 
-Deliberate hardenings over the reference, matching the other backends:
+Deliberate hardenings over the reference, matching ``ParquetStateStore``:
 
   * merges are idempotent by batch_id (``_applied_batches`` ledger in
     the same transaction - the reference double-counts on replay);
@@ -65,10 +63,69 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import DecimalType
+from pyspark.sql.types import (
+    DataType,
+    DecimalType,
+    IntegerType,
+    LongType,
+    StringType,
+    TimestampType,
+)
 
-from pyspark_data_engineering_assignment_spark.state.duckdb_store import _ddl_type
 from pyspark_data_engineering_assignment_spark.state.store import StateTableSpec
+
+
+def _ddl_type(dt: DataType) -> str:
+    if isinstance(dt, StringType):
+        return "VARCHAR"
+    if isinstance(dt, IntegerType):
+        return "INTEGER"
+    if isinstance(dt, LongType):
+        return "BIGINT"
+    if isinstance(dt, DecimalType):
+        return f"DECIMAL({dt.precision},{dt.scale})"
+    if isinstance(dt, TimestampType):
+        return "TIMESTAMP"
+    raise TypeError(f"unsupported state column type: {dt}")
+
+
+def migration_statements(
+    old_spec: StateTableSpec, new_spec: StateTableSpec
+) -> list[str]:
+    """Portable ALTER TABLE plan for evolving ``old_spec`` into
+    ``new_spec`` - the SQL every targeted engine (DuckDB, PostgreSQL)
+    accepts verbatim: ``ADD COLUMN`` (with ``DEFAULT 0`` + backfill for
+    new sum_cols), ``ALTER COLUMN ... SET DATA TYPE ... USING CAST``
+    for type changes (the explicit USING clause matters: PostgreSQL
+    rejects ``SET DATA TYPE`` without it for any change lacking an
+    assignment cast, e.g. VARCHAR->BIGINT, while DuckDB accepts the
+    USING form too; only the DuckDB dialect is exercised by the
+    tests), ``DROP COLUMN`` for removals."""
+    old_fields = {f.name: f for f in old_spec.schema.fields}
+    new_fields = {f.name: f for f in new_spec.schema.fields}
+    stmts = []
+    for name, f in new_fields.items():
+        ddl = _ddl_type(f.dataType)
+        if name not in old_fields:
+            default = " DEFAULT 0" if name in new_spec.sum_cols else ""
+            stmts.append(
+                f"ALTER TABLE {old_spec.name} ADD COLUMN {name} {ddl}{default}"
+            )
+            if name in new_spec.sum_cols:
+                # DEFAULT covers future inserts; backfill existing rows
+                stmts.append(
+                    f"UPDATE {old_spec.name} SET {name} = 0 "
+                    f"WHERE {name} IS NULL"
+                )
+        elif _ddl_type(old_fields[name].dataType) != ddl:
+            stmts.append(
+                f"ALTER TABLE {old_spec.name} ALTER COLUMN {name} "
+                f"SET DATA TYPE {ddl} USING CAST({name} AS {ddl})"
+            )
+    for name in old_fields:
+        if name not in new_fields:
+            stmts.append(f"ALTER TABLE {old_spec.name} DROP COLUMN {name}")
+    return stmts
 
 
 def create_table_sql(spec: StateTableSpec) -> str:
@@ -141,8 +198,11 @@ class JdbcStateStore:
     autocommit mode (transactions are driven explicitly with
     BEGIN/COMMIT/ROLLBACK statements, which every targeted engine
     accepts as plain SQL). ``paramstyle``: ``"qmark"`` (DuckDB) or
-    ``"format"`` (psycopg). ``max_batch_rows`` bounds the driver
-    crossing exactly like ``DuckDBStateStore``.
+    ``"format"`` (psycopg). ``max_batch_rows`` guards the driver
+    crossing: per-batch aggregates are collected to the driver, which
+    suits dimension-sized state but would OOM it on a misrouted
+    fact-sized frame, so an over-limit batch raises ``ValueError``
+    instead and is not applied.
     """
 
     # one connection, explicit transactions: merges must be sequential
@@ -223,10 +283,11 @@ class JdbcStateStore:
     def migrate_schema(
         self, old_spec: StateTableSpec, new_spec: StateTableSpec
     ) -> int:
-        """Schema evolution over the wire protocol: executes the shared
-        portable ALTER plan (``duckdb_store.migration_statements`` -
-        valid DuckDB and PostgreSQL verbatim) in one explicit
-        transaction. Same rules as both other backends: keys immutable,
+        """Schema evolution over the wire protocol: executes the portable
+        ALTER plan (``migration_statements`` - valid DuckDB and
+        PostgreSQL verbatim) in one explicit transaction, so a concurrent
+        reader on another connection sees the old or the new shape,
+        never half. Same rules as ``ParquetStateStore``: keys immutable,
         added sum_cols default 0 with backfill, drops discard, type
         changes cast. Returns the number of statements executed."""
         if old_spec.name != new_spec.name:
@@ -239,10 +300,6 @@ class JdbcStateStore:
                 "key columns are the table's identity and cannot be "
                 f"migrated: {old_spec.key_cols} -> {new_spec.key_cols}"
             )
-        from pyspark_data_engineering_assignment_spark.state.duckdb_store import (
-            migration_statements,
-        )
-
         self._ensure_table(old_spec)
         stmts = migration_statements(old_spec, new_spec)
         self.cur.execute("BEGIN")
@@ -285,7 +342,8 @@ class JdbcStateStore:
             )
         )
         # bounded driver crossing: the +1 row proves overflow without
-        # materializing the rest (same guard as DuckDBStateStore)
+        # materializing the rest, so even the failing call stays
+        # memory-safe
         rows = prepared.limit(self.max_batch_rows + 1).collect()
         if len(rows) > self.max_batch_rows:
             raise ValueError(
@@ -298,7 +356,6 @@ class JdbcStateStore:
         ts_literal = now or None
         n_cols = len(spec.key_cols) + len(spec.sum_cols)
         placeholders = ", ".join([self._ph] * n_cols)
-        ts_expr = f"CAST({self._ph} AS TIMESTAMP)" if ts_literal else "now()"
         try:
             self.cur.execute("BEGIN")
             self.cur.execute(temp_table_sql(spec, temp))

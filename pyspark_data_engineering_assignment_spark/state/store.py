@@ -141,8 +141,8 @@ class ParquetStateStore:
 
     # Merges to DIFFERENT tables may run from concurrent driver threads:
     # each table has its own pointer file and snapshot dirs, and Spark's
-    # scheduler interleaves the jobs. (A JDBC/DuckDB backend whose single
-    # connection is not thread-safe leaves this False.)
+    # scheduler interleaves the jobs. (JdbcStateStore, whose single
+    # connection is not thread-safe, leaves this False.)
     supports_concurrent_merges = True
 
     def __init__(self, spark: SparkSession, root: str, n_buckets: int = 16) -> None:
@@ -593,8 +593,8 @@ class ParquetStateStore:
         # PERMISSIVE-nulled into the batch), not a key. This is the PK
         # semantics the reference's Postgres table enforced - except there
         # the violation CRASHED the stream on every replay (poison pill);
-        # here the row simply never enters state. The DuckDB backend
-        # applies the identical WHERE so both backends agree (pinned by
+        # here the row simply never enters state. JdbcStateStore applies
+        # the identical filter so both backends agree (pinned by
         # test_null_keyed_rows_excluded_both_backends).
         key_not_null = F.lit(True)
         for k in spec.key_cols:

@@ -57,8 +57,8 @@ def main() -> None:
         "--include-local",
         action="store_true",
         help="also simulate every local_oracle query - pre-validates "
-        "FUTURE rotation promotions against the driver's "
-        "canonicalization before they ever enter the window",
+        "a local oracle against the driver's canonicalization before "
+        "its query is moved into the window",
     )
     args = ap.parse_args()
 

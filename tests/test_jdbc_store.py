@@ -15,10 +15,10 @@ Two halves:
      ``COALESCE(x, 0)`` on both sides.
 
   2. **Behavioral agreement.** The store satisfies the same contract
-     as the other two backends (see also the parametrized suite in
-     ``test_state_store.py``, which this file extends with "jdbc"), and
-     the full streaming flagship runs against it with state matching
-     the DuckDB oracle over the exact fed chunks.
+     as ``ParquetStateStore`` (see also the parametrized suite in
+     ``test_state_store.py``, which runs it as "duckdb" and "jdbc"; the
+     full streaming flagship runs against it in
+     ``test_streaming_e2e.py``).
 """
 
 from __future__ import annotations
@@ -39,6 +39,7 @@ from pyspark_data_engineering_assignment_spark.state.store import (
     MERCHANT_GENDER_SUMMARY,
     MERCHANT_SUMMARY,
 )
+from tests.state_backends import proxied_store
 
 # --- the reference protocol statements -----------------------------------
 # Shape transcribed from /root/reference/mechanism_y/Mechanism Y.py (cited
@@ -144,8 +145,8 @@ def test_merge_leaves_no_temp_tables(spark, jstore):
     transaction: after N merges the database holds only the target and
     ledger tables (the reference leaked one temp table per batch per
     state table into the shared RDBMS)."""
-    from pyspark_data_engineering_assignment_spark.state.duckdb_store import (
-        _ddl_type,  # noqa: F401  (import proves shared dialect module)
+    from pyspark_data_engineering_assignment_spark.state.jdbc_store import (
+        _ddl_type,  # noqa: F401  (the DDL type map lives with the store)
     )
 
     schema = MERCHANT_SUMMARY
@@ -219,137 +220,14 @@ def test_batch_meta_roundtrip(spark, jstore):
     assert jstore.last_batch_id(MERCHANT_SUMMARY) == 0
 
 
-def test_flagship_pipeline_runs_on_jdbc_store(spark, tmp_path):
-    """End-to-end: the full streaming flagship over the JDBC-protocol
-    backend, state oracle-checked against DuckDB groupBys of the exact
-    fed chunk CSVs (same gate as the parquet/duckdb backends)."""
-    import os
-
-    import duckdb
-
-    from pyspark_data_engineering_assignment_spark.tools.events_feed import (
-        run_events_flagship,
-    )
-
-    run = run_events_flagship(
-        spark,
-        "/root/testdata/sf0.001",
-        str(tmp_path),
-        chunk_rows=500,
-        store_factory=lambda sp, wd: JdbcStateStore.duckdb(
-            sp, os.path.join(wd, "state.duckdb")
-        ),
-    )
-    store = run["store"]
-    con = duckdb.connect()
-    files = ", ".join(f"'{p}'" for p in run["chunks"])
-    con.execute(
-        f"CREATE VIEW tx AS SELECT * FROM read_csv_auto([{files}], "
-        "types={'amount': 'DECIMAL(18,2)', 'customer': 'VARCHAR', "
-        "'merchant': 'VARCHAR', 'gender': 'VARCHAR'})"
-    )
-    got = {
-        r["merchant_id"]: r["total_transactions"]
-        for r in store.read_state(MERCHANT_SUMMARY).collect()
-    }
-    want = dict(
-        con.execute("SELECT merchant, count(*) FROM tx GROUP BY 1").fetchall()
-    )
-    assert got == want and got
-    got_g = {
-        r["merchant_id"]: (
-            r["male_transaction_count"],
-            r["female_transaction_count"],
-        )
-        for r in store.read_state(MERCHANT_GENDER_SUMMARY).collect()
-    }
-    want_g = {
-        m: (mm, ff)
-        for m, mm, ff in con.execute(
-            "SELECT merchant, count(*) FILTER (WHERE gender = 'M'), "
-            "count(*) FILTER (WHERE gender = 'F') FROM tx GROUP BY 1"
-        ).fetchall()
-    }
-    assert got_g == want_g
-
-
 # --- paramstyle portability (round-12 verdict task #8) ---------------------
 #
-# No Postgres server exists in the sandbox, so the psycopg ("format")
-# wiring is exercised at the DB-API seam instead: a recording proxy
-# validates every statement's placeholder discipline for the declared
-# paramstyle, translates %s -> ? for the embedded DuckDB engine, and
-# keeps the full (sql, params) stream for snapshot pinning.
-
-
-class _ParamstyleProxyCursor:
-    """DB-API cursor proxy enforcing one paramstyle end-to-end.
-
-    format mode: every parameterized statement must use %s only (a
-    stray ? would bind nothing under psycopg), placeholder count must
-    equal each param tuple's length, and no %% literal-escape shapes
-    are emitted (the store never needs them); statements are then
-    rewritten to qmark for the underlying DuckDB cursor.
-    qmark mode: the mirror checks, no rewriting."""
-
-    def __init__(self, inner, paramstyle: str, log: list):
-        self._inner = inner
-        self._ps = paramstyle
-        self._log = log
-
-    def _check_and_translate(self, sql: str, params) -> str:
-        bad_ph, good_ph = ("?", "%s") if self._ps == "format" else ("%s", "?")
-        assert bad_ph not in sql, f"{self._ps} statement leaked {bad_ph!r}: {sql}"
-        assert "%%" not in sql, f"unexpected %% escape: {sql}"
-        n = sql.count(good_ph)
-        if params is not None:
-            rows = params if isinstance(params, list) and params and isinstance(params[0], (list, tuple)) else [params]
-            for p in rows:
-                assert len(p) == n, (sql, p)
-        else:
-            assert n == 0, f"placeholders with no params: {sql}"
-        return sql.replace("%s", "?") if self._ps == "format" else sql
-
-    def execute(self, sql, params=None):
-        self._log.append(("execute", sql, params))
-        sql = self._check_and_translate(sql, params)
-        return (
-            self._inner.execute(sql, params)
-            if params is not None
-            else self._inner.execute(sql)
-        )
-
-    def executemany(self, sql, seq):
-        self._log.append(("executemany", sql, list(seq)))
-        sql = self._check_and_translate(sql, list(seq))
-        return self._inner.executemany(sql, seq)
-
-    def __getattr__(self, name):  # fetchone/fetchall/...
-        return getattr(self._inner, name)
-
-
-class _ParamstyleProxyConnection:
-    def __init__(self, db_path: str, paramstyle: str, log: list):
-        import duckdb
-
-        self._con = duckdb.connect(db_path)
-        self._ps = paramstyle
-        self._log = log
-
-    def cursor(self):
-        return _ParamstyleProxyCursor(self._con.cursor(), self._ps, self._log)
+# The psycopg ("format") wiring runs through tests/state_backends.py, which
+# checks every statement's placeholder discipline for its paramstyle.
 
 
 def _proxied_store(spark, tmp_path, paramstyle: str):
-    log: list = []
-    store = JdbcStateStore(
-        spark,
-        connect=lambda: _ParamstyleProxyConnection(
-            str(tmp_path / f"state_{paramstyle}.duckdb"), paramstyle, log
-        ),
-        paramstyle=paramstyle,
-    )
-    return store, log
+    return proxied_store(spark, str(tmp_path / f"state_{paramstyle}.duckdb"), paramstyle)
 
 
 @pytest.mark.parametrize("paramstyle", ["qmark", "format"])

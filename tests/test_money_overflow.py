@@ -10,7 +10,8 @@ The contract pinned here, at every level money crosses a narrower type:
   ``try_cast`` silently NULLed it and the batch sum dropped real money;
 * per-batch: a batch total over DECIMAL(18,2) refuses loudly;
 * cumulative: an additive merge whose running total overflows refuses
-  loudly on ALL THREE backends, and the parquet store's refused merge
+  loudly on both backends (``JdbcStateStore`` under both of its
+  wirings), and the parquet store's refused merge
   leaves prior state intact (atomic pointer swap never happened);
 * ANSI-independence: the guards are explicit ``raise_error`` arms, so
   a deployment running ``spark.sql.ansi.enabled=false`` (where a plain
@@ -40,6 +41,7 @@ from pyspark_data_engineering_assignment_spark.state.store import (
     CUSTOMER_MERCHANT_SUMMARY,
     ParquetStateStore,
 )
+from tests.state_backends import make_store
 
 pytestmark = pytest.mark.axis
 
@@ -127,22 +129,11 @@ def test_cumulative_merge_overflow_refuses_and_keeps_state(
 def test_cumulative_merge_overflow_refuses_rdbms_backends(
     spark, tmp_path, backend
 ):
-    """The RDBMS backends inherit the reference's own refusal: DuckDB's
+    """The RDBMS backend inherits the reference's own refusal: DuckDB's
     DECIMAL(18,2) column (same dialect as the Postgres NUMERIC the
     reference writes to) raises on an additive UPSERT that overflows -
     never stores a wrapped or NULL total."""
-    if backend == "duckdb":
-        from pyspark_data_engineering_assignment_spark.state.duckdb_store import (
-            DuckDBStateStore,
-        )
-
-        store = DuckDBStateStore(spark, str(tmp_path / "s.duckdb"))
-    else:
-        from pyspark_data_engineering_assignment_spark.state.jdbc_store import (
-            JdbcStateStore,
-        )
-
-        store = JdbcStateStore.duckdb(spark, str(tmp_path / "s.jdbc.duckdb"))
+    store = make_store(backend, spark, str(tmp_path / "s"))
     b0 = spark.createDataFrame(
         [("C1", "M1", 1, Decimal("6000000000000000.00"))], CM_AGG_SCHEMA
     )

@@ -482,7 +482,7 @@ def test_oracle_queries_fit_driver_sample_window():
     n_oracle = sum(oracle_flags)
     assert n_oracle <= 50, (
         f"{n_oracle} oracle-bearing queries > driver sample size 50; "
-        "consolidate redundant entries (see plans/__init__.py)"
+        "move a redundant entry's SQL to local_oracle at its @register"
     )
     first_rows_only = oracle_flags.index(False) if False in oracle_flags else len(names)
     stragglers = [

@@ -2,8 +2,9 @@
 
 The driver's independent correctness gate samples the FIRST 50 registry
 entries. The rotation that cycled every oracle-bearing query through
-that window RETIRED at round 10 (plans/__init__.py:44-50): from round
-11 on, the window must stay EXACTLY this list unless a deliberate
+that window RETIRED at round 10, and each query's placement is now
+declared once, at its @register (``oracle`` or ``local_oracle``): from
+round 11 on, the window must stay EXACTLY this list unless a deliberate
 promotion note accompanies the change. Without this pin, an innocent
 registration reorder (a new module import, an alphabetization, a moved
 register() call) could silently eject a driver-checked query from the
@@ -24,8 +25,8 @@ from pyspark_data_engineering_assignment_spark.plans import QUERIES
 # all 50 green), with ONE deliberate round-12 promotion - this edit is
 # the promotion note the module docstring prescribes: dedup_exact_nfc
 # (added round 11, the only query never driver-sampled) swaps in for
-# long-green rollup_lineitem_status (driver-green r1-r11; demoted to
-# local_oracle in plans/__init__.py, keeping the identical
+# long-green rollup_lineitem_status (driver-green r1-r11; registered
+# with local_oracle in plans/registry.py, keeping the identical
 # rows+schema+value-hash check in tests/test_oracle_parity.py).
 # Order matters: the driver samples by position.
 FROZEN_WINDOW = [

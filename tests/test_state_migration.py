@@ -1,4 +1,4 @@
-"""State-table schema evolution (round-11) across all three backends.
+"""State-table schema evolution (round-11) across both state backends.
 
 A long-lived pipeline WILL add a counter to its cumulative state; at
 100 TB the table cannot be dropped and re-accumulated, and the
@@ -33,6 +33,7 @@ from pyspark_data_engineering_assignment_spark.state.store import (
     ParquetStateStore,
     StateTableSpec,
 )
+from tests.state_backends import make_store
 
 NOW = "2024-01-01 00:00:00"
 
@@ -73,25 +74,11 @@ def _state(store, spec):
     }
 
 
-def _make_store(backend, spark, tmp_path):
-    if backend == "parquet":
-        return ParquetStateStore(spark, str(tmp_path), n_buckets=4)
-    if backend == "jdbc":
-        from pyspark_data_engineering_assignment_spark.state.jdbc_store import (
-            JdbcStateStore,
-        )
-
-        return JdbcStateStore.duckdb(spark, str(tmp_path) + ".jdbc.duckdb")
-    from pyspark_data_engineering_assignment_spark.state.duckdb_store import (
-        DuckDBStateStore,
-    )
-
-    return DuckDBStateStore(spark, str(tmp_path) + ".duckdb")
-
-
 @pytest.fixture(params=["parquet", "duckdb", "jdbc"])
 def store(request, spark, tmp_path):
-    return _make_store(request.param, spark, tmp_path)
+    """``JdbcStateStore`` runs under both of its wirings
+    (``tests/state_backends.py``)."""
+    return make_store(request.param, spark, str(tmp_path), n_buckets=4)
 
 
 def test_add_sum_column_backfills_zero_and_merges(spark, store):

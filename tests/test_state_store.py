@@ -23,11 +23,15 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from pyspark_data_engineering_assignment_spark.state.jdbc_store import (
+    JdbcStateStore,
+)
 from pyspark_data_engineering_assignment_spark.state.store import (
     CUSTOMER_MERCHANT_SUMMARY,
     MERCHANT_SUMMARY,
     ParquetStateStore,
 )
+from tests.state_backends import make_store
 
 NOW = "2024-01-01 00:00:00"
 
@@ -48,28 +52,13 @@ CM_AGG_SCHEMA = StructType(
 )
 
 
-def _make_store(backend: str, spark, path):
-    if backend == "parquet":
-        return ParquetStateStore(spark, str(path))
-    if backend == "jdbc":
-        from pyspark_data_engineering_assignment_spark.state.jdbc_store import (
-            JdbcStateStore,
-        )
-
-        return JdbcStateStore.duckdb(spark, str(path) + ".jdbc.duckdb")
-    from pyspark_data_engineering_assignment_spark.state.duckdb_store import (
-        DuckDBStateStore,
-    )
-
-    return DuckDBStateStore(spark, str(path) + ".duckdb")
-
-
 @pytest.fixture(params=["parquet", "duckdb", "jdbc"])
 def store(request, spark, tmp_path):
-    """Every merge-semantics test runs against ALL THREE backends: the
-    distributed parquet/Delta-shaped store, the embedded RDBMS UPSERT
-    store, and the reference-protocol temp-table+UPSERT JDBC store."""
-    return _make_store(request.param, spark, tmp_path / "state")
+    """Every merge-semantics test runs against both backends: the
+    distributed parquet/Delta-shaped store and the reference-protocol
+    temp-table+UPSERT store, the latter under both of its wirings
+    (``tests/state_backends.py``)."""
+    return make_store(request.param, spark, str(tmp_path / "state"))
 
 
 def merchant_state(store):
@@ -206,14 +195,14 @@ def test_batch_invariance(spark, tmp_path, backend):
         ("C2", "M1", 1, Decimal("7.25")),
         ("C2", "M2", 4, Decimal("0.75")),
     ]
-    one = _make_store(backend, spark, tmp_path / "one")
+    one = make_store(backend, spark, str(tmp_path / "one"))
     one.merge_batch(
         CUSTOMER_MERCHANT_SUMMARY,
         spark.createDataFrame(rows, CM_AGG_SCHEMA),
         batch_id=0,
         now=NOW,
     )
-    many = _make_store(backend, spark, tmp_path / "many")
+    many = make_store(backend, spark, str(tmp_path / "many"))
     for bid, row in enumerate(rows):
         many.merge_batch(
             CUSTOMER_MERCHANT_SUMMARY,
@@ -275,8 +264,8 @@ def test_backends_agree(spark, tmp_path, backend):
         [("C1", "M1", 1, Decimal("0.10")), ("C2", "M1", 1, None)],
         [("C1", "M1", 2, Decimal("0.20"))],
     ]
-    ref = _make_store("parquet", spark, tmp_path / "ref")
-    other = _make_store(backend, spark, tmp_path / "other")
+    ref = make_store("parquet", spark, str(tmp_path / "ref"))
+    other = make_store(backend, spark, str(tmp_path / "other"))
     for bid, rows in enumerate(batches):
         for s in (ref, other):
             s.merge_batch(
@@ -313,15 +302,14 @@ def test_merge_without_meta_clears_stale_meta(spark, store):
 
 
 def test_duckdb_driver_boundary_guard(spark, tmp_path):
-    """The embedded backend tops out at max_batch_rows: a fact-sized
-    frame routed at it raises instead of OOMing the driver, and the
-    over-limit batch is NOT applied (transactional no-op)."""
-    from pyspark_data_engineering_assignment_spark.state.duckdb_store import (
-        DuckDBStateStore,
-    )
+    """JdbcStateStore tops out at max_batch_rows: a fact-sized frame
+    routed at it raises instead of OOMing the driver, and the over-limit
+    batch is NOT applied (no ledger entry, no state, no temp table)."""
     from pyspark.sql import functions as F
 
-    store = DuckDBStateStore(spark, str(tmp_path / "guard.duckdb"), max_batch_rows=10)
+    store = JdbcStateStore.duckdb(
+        spark, str(tmp_path / "guard.duckdb"), max_batch_rows=10
+    )
     big = spark.range(11).select(
         F.concat(F.lit("M"), F.col("id")).alias("merchant_id"),
         F.lit(1).cast("long").alias("total_transactions"),
@@ -330,6 +318,8 @@ def test_duckdb_driver_boundary_guard(spark, tmp_path):
         store.merge_batch(MERCHANT_SUMMARY, big, batch_id=0, now=NOW)
     assert store.last_batch_id(MERCHANT_SUMMARY) == -1
     assert store.read_state(MERCHANT_SUMMARY).count() == 0
+    store.cur.execute("SELECT table_name FROM information_schema.tables")
+    assert not [t for (t,) in store.cur.fetchall() if t.startswith("temp_")]
     # at or under the ceiling passes
     ok = big.limit(10)
     store.merge_batch(MERCHANT_SUMMARY, ok, batch_id=0, now=NOW)
@@ -340,12 +330,7 @@ def test_state_store_protocol_is_satisfied():
     """The Protocol declares everything DetectionPipeline calls
     (read_state/merge_batch/last_batch_id/batch_meta/vacuum); both
     backends must structurally provide the full surface."""
-    from pyspark_data_engineering_assignment_spark.state.duckdb_store import (
-        DuckDBStateStore,
-    )
-    from pyspark_data_engineering_assignment_spark.state.store import StateStore
-
-    for backend in (ParquetStateStore, DuckDBStateStore):
+    for backend in (ParquetStateStore, JdbcStateStore):
         for method in ("read_state", "merge_batch", "last_batch_id",
                        "batch_meta", "vacuum"):
             assert callable(getattr(backend, method)), (backend, method)

@@ -23,6 +23,7 @@ from pyspark_data_engineering_assignment_spark.config import EngineConfig, Patte
 from pyspark_data_engineering_assignment_spark.patterns.detect import FixedClock
 from pyspark_data_engineering_assignment_spark.schemas import TRANSACTION_SCHEMA
 from pyspark_data_engineering_assignment_spark.sources.readers import read_csv, read_importance
+from pyspark_data_engineering_assignment_spark.state.jdbc_store import JdbcStateStore
 from pyspark_data_engineering_assignment_spark.state.store import (
     CUSTOMER_MERCHANT_SUMMARY,
     MERCHANT_GENDER_SUMMARY,
@@ -317,17 +318,13 @@ def test_processing_time_trigger(spark, tmp_path):
 
 
 def test_pipeline_with_duckdb_state_backend(spark, tmp_path):
-    """The pipeline is backend-agnostic: the reference-parity RDBMS
-    UPSERT store yields the same per-batch detections as the parquet
-    store (also exercises process_batch as a plain batch loop -
-    backfill without a stream)."""
-    from pyspark_data_engineering_assignment_spark.state.duckdb_store import (
-        DuckDBStateStore,
-    )
-
+    """The pipeline is backend-agnostic: the reference-protocol RDBMS
+    UPSERT store on embedded DuckDB yields the same per-batch detections
+    as the parquet store (also exercises process_batch as a plain batch
+    loop - backfill without a stream)."""
     input_dir, imp_path, chunk_paths = _write_inputs(tmp_path)
     importance = read_importance(spark, imp_path)
-    store = DuckDBStateStore(spark, str(tmp_path / "state.duckdb"))
+    store = JdbcStateStore.duckdb(spark, str(tmp_path / "state.duckdb"))
     detections_dir = str(tmp_path / "detections")
     pipe = DetectionPipeline(
         spark, store, importance, detections_dir, config=EngineConfig(), clock=CLOCK
@@ -546,8 +543,9 @@ def test_streaming_flagship_sf_state_oracle(spark, tmp_path, backend):
     batch aggregate, penny-exactly, at any chunking.
 
     Parameterized over BOTH state backends, so the reference's RDBMS
-    ``INSERT .. ON CONFLICT DO UPDATE`` protocol (DuckDB store) is
-    validated at flagship scale too, not just in unit tests - including
+    temp-table + ``INSERT .. ON CONFLICT DO UPDATE`` protocol
+    (``JdbcStateStore`` on embedded DuckDB) is validated at flagship
+    scale too, not just in unit tests - including
     that the pipeline correctly falls back to sequential merges for a
     backend whose connection is not thread-safe.
 
@@ -562,12 +560,8 @@ def test_streaming_flagship_sf_state_oracle(spark, tmp_path, backend):
 
     factory = None
     if backend == "duckdb":
-        from pyspark_data_engineering_assignment_spark.state.duckdb_store import (
-            DuckDBStateStore,
-        )
-
         def factory(sp, workdir):
-            return DuckDBStateStore(sp, os.path.join(workdir, "state.duckdb"))
+            return JdbcStateStore.duckdb(sp, os.path.join(workdir, "state.duckdb"))
 
     sf_dir = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01")
     run = run_events_flagship(
@@ -589,7 +583,7 @@ def test_streaming_flagship_sf_state_oracle(spark, tmp_path, backend):
         for r in store.read_state(MERCHANT_SUMMARY).collect()
     }
     want_m = dict(con.execute("SELECT merchant, count(*) FROM tx GROUP BY 1").fetchall())
-    assert got_m == want_m
+    assert got_m == want_m and got_m
 
     got_cm = {
         (r["customer_id"], r["merchant_id"]): (
@@ -627,16 +621,12 @@ def test_malformed_chunk_is_not_a_poison_pill(spark, tmp_path):
     """System-level pin of the NULL-key state contract: a chunk whose
     rows are malformed (wrong arity / untypable - PERMISSIVE nulls every
     field, so the batch aggregates carry NULL merchant/customer keys)
-    must not take the stream down. Run against the DuckDB backend
+    must not take the stream down. Run against the RDBMS backend
     because that is where it crash-LOOPED before the fix (the PRIMARY
     KEY threw on the NULL key, and the poisoned chunk file survives
     restart, so every retry hit the same error). The clean chunks'
     detections and final state must be exactly the clean run's."""
     import time as _time
-
-    from pyspark_data_engineering_assignment_spark.state.duckdb_store import (
-        DuckDBStateStore,
-    )
 
     input_dir, imp_path, chunk_paths = _write_inputs(tmp_path)
     # a fifth chunk of pure garbage, mtime-ordered after the real four
@@ -649,7 +639,7 @@ def test_malformed_chunk_is_not_a_poison_pill(spark, tmp_path):
     os.utime(poison, (mt, mt))
 
     importance = read_importance(spark, imp_path)
-    store = DuckDBStateStore(spark, str(tmp_path / "state.duckdb"))
+    store = JdbcStateStore.duckdb(spark, str(tmp_path / "state.duckdb"))
     detections_dir = str(tmp_path / "detections")
     pipe = DetectionPipeline(
         spark, store, importance, detections_dir, config=EngineConfig(),
