@@ -1,4 +1,9 @@
-from pyspark_data_engineering_assignment_spark.functions.vectors import cosine, dot, l2_norm
+from pyspark_data_engineering_assignment_spark.functions.vectors import (
+    cosine,
+    dot,
+    dot_sql,
+    l2_norm,
+)
 from pyspark_data_engineering_assignment_spark.functions.text import (
     distinct_tokens,
     md5_fingerprint,
@@ -9,6 +14,7 @@ from pyspark_data_engineering_assignment_spark.functions.text import (
 __all__ = [
     "cosine",
     "dot",
+    "dot_sql",
     "l2_norm",
     "tokens",
     "distinct_tokens",

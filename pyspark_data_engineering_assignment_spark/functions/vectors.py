@@ -18,19 +18,9 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Sequential-fold dot product in float64."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
 def dot_sql(a: str, b: str) -> str:
-    """``dot`` as SQL text over two SQL expressions: the same casts and
-    the same sequential fold, for an expression written as one SQL
-    string (one parse, instead of a py4j round trip per lambda)."""
+    """Sequential-fold float64 dot product as SQL text over two SQL
+    expressions, for embedding in a larger SQL expression."""
     return (
         f"aggregate(zip_with({a}, {b}, "
         "(_x, _y) -> CAST(_x AS DOUBLE) * CAST(_y AS DOUBLE)), "
@@ -38,13 +28,24 @@ def dot_sql(a: str, b: str) -> str:
     )
 
 
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(dot(a, a))
+# The Column builders take column names (SQL identifiers; ``a.vec``
+# resolves through a DataFrame alias) and parse one SQL string: building
+# the same expression from Python lambdas costs a chain of py4j calls
+# per lambda, ~100x the driver time of one ``F.expr``.
+def dot(a: str, b: str) -> Column:
+    """Sequential-fold dot product in float64."""
+    return F.expr(dot_sql(a, b))
 
 
-def cosine(a: Column, b: Column) -> Column:
+def l2_norm(a: str) -> Column:
+    return F.expr(f"sqrt({dot_sql(a, a)})")
+
+
+def cosine(a: str, b: str) -> Column:
     """Cosine similarity: dot / (||a|| * ||b||), all in float64."""
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
+    return F.expr(
+        f"{dot_sql(a, b)} / (sqrt({dot_sql(a, a)}) * sqrt({dot_sql(b, b)}))"
+    )
 
 
 # ---------------------------------------------------------------------------

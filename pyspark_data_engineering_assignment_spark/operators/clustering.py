@@ -266,7 +266,7 @@ def build_ivf_det_index(
             ),
             on="neighbor_id",
         )
-        .withColumn("_cn", l2_norm(F.col("cvec")))
+        .withColumn("_cn", l2_norm("cvec"))
     )
     return cells, corpus
 
@@ -327,7 +327,7 @@ def probe_ivf_det(
             qbase.select(F.col("vid").alias("query_id"), F.col("vec").alias("qvec")),
             on="query_id",
         )
-        .withColumn("_qn", l2_norm(F.col("qvec")))
+        .withColumn("_qn", l2_norm("qvec"))
     )
     pairs = probes.join(corpus, on="cell")
     if exclude_self:
@@ -335,7 +335,7 @@ def probe_ivf_det(
     scored = pairs.select(
         "query_id",
         "neighbor_id",
-        (dot(F.col("qvec"), F.col("cvec")) / (F.col("_qn") * F.col("_cn"))).alias(
+        (dot("qvec", "cvec") / (F.col("_qn") * F.col("_cn"))).alias(
             "cos"
         ),
     ).distinct()  # a neighbor reachable via two probed cells ranks once

@@ -66,17 +66,17 @@ def brute_force_topk(
     # this hardens the operator for exclude_self=False callers too.
     q = queries.filter(F.col(id_col).isNotNull()).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-    ).withColumn("_qn", l2_norm(F.col("qvec")))
+    ).withColumn("_qn", l2_norm("qvec"))
     c = corpus.filter(F.col(id_col).isNotNull()).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec")
-    ).withColumn("_cn", l2_norm(F.col("cvec")))
+    ).withColumn("_cn", l2_norm("cvec"))
     pairs = F.broadcast(q).crossJoin(c)
     if exclude_self:
         pairs = pairs.filter(F.col("query_id") != F.col("neighbor_id"))
     scored = pairs.select(
         "query_id",
         "neighbor_id",
-        (dot(F.col("qvec"), F.col("cvec")) / (F.col("_qn") * F.col("_cn"))).alias("cos"),
+        (dot("qvec", "cvec") / (F.col("_qn") * F.col("_cn"))).alias("cos"),
     )
     # A NULL or dimension-mismatched vector yields cos NULL (zip_with
     # pads the short side with NULLs); such a candidate must not occupy
@@ -152,10 +152,10 @@ def int8_topk(
     _clean = lambda v: valid_vector(v) & F.col(id_col).isNotNull()  # noqa: E731
     q = _codes(
         queries.filter(_clean(vec_col)), "query_id", "qv"
-    ).withColumn("qq2", dot(F.col("qv"), F.col("qv")))
+    ).withColumn("qq2", dot("qv", "qv"))
     c = _codes(
         corpus.filter(_clean(vec_col)), "neighbor_id", "cv"
-    ).withColumn("cc2", dot(F.col("cv"), F.col("cv")))
+    ).withColumn("cc2", dot("cv", "cv"))
     pairs = F.broadcast(q).crossJoin(c)
     if exclude_self:
         pairs = pairs.filter(F.col("query_id") != F.col("neighbor_id"))
@@ -164,7 +164,7 @@ def int8_topk(
         "neighbor_id",
         F.when(
             (F.col("qq2") > 0) & (F.col("cc2") > 0),
-            dot(F.col("qv"), F.col("cv"))
+            dot("qv", "cv")
             / F.sqrt(F.col("qq2") * F.col("cc2")),
         )
         .otherwise(F.lit(0.0))
@@ -273,14 +273,14 @@ def lsh_bucketed_topk(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cvec"),
         _rh_signature(vec_col, planes).alias("bucket"),
-    ).withColumn("_cn", l2_norm(F.col("cvec")))
+    ).withColumn("_cn", l2_norm("cvec"))
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qvec"),
         F.explode(
             _probe_buckets(_rh_signature(vec_col, planes), n_planes, probe_bits)
         ).alias("bucket"),
-    ).withColumn("_qn", l2_norm(F.col("qvec")))
+    ).withColumn("_qn", l2_norm("qvec"))
     pairs = F.broadcast(q).join(c, on="bucket")
     if exclude_self:
         pairs = pairs.filter(F.col("query_id") != F.col("neighbor_id"))
@@ -288,7 +288,7 @@ def lsh_bucketed_topk(
     scored = pairs.select(
         "query_id",
         "neighbor_id",
-        (dot(F.col("qvec"), F.col("cvec")) / (F.col("_qn") * F.col("_cn"))).alias("cos"),
+        (dot("qvec", "cvec") / (F.col("_qn") * F.col("_cn"))).alias("cos"),
     )
     # A NULL or dimension-mismatched vector yields cos NULL (zip_with
     # pads the short side with NULLs); such a candidate must not occupy
@@ -372,7 +372,7 @@ def build_ivf_index(
             F.col(vec_col).alias("cvec"),
             F.col("prediction").alias("cell"),
         )
-        .withColumn("_cn", l2_norm(F.col("cvec")))
+        .withColumn("_cn", l2_norm("cvec"))
     )
     centroids = spark.createDataFrame(
         [(i, [float(x) for x in ctr]) for i, ctr in enumerate(model.clusterCenters())],
@@ -523,7 +523,7 @@ def probe_ivf(
         .withColumn("_pr", F.row_number().over(w_probe))
         .filter(F.col("_pr") <= n_probe)
         .select("query_id", "qvec", "cell")
-        .withColumn("_qn", l2_norm(F.col("qvec")))
+        .withColumn("_qn", l2_norm("qvec"))
     )
     # no broadcast hint on the probed side: per-request batches are
     # usually tiny and AQE broadcasts them from SIZE, but probe_ivf is
@@ -541,7 +541,7 @@ def probe_ivf(
     scored = pairs.select(
         "query_id",
         "neighbor_id",
-        (dot(F.col("qvec"), F.col("cvec")) / (F.col("_qn") * F.col("_cn"))).alias("cos"),
+        (dot("qvec", "cvec") / (F.col("_qn") * F.col("_cn"))).alias("cos"),
     )
     # same corrupt-candidate exclusion as brute_force_topk: NULL cos
     # (null/ragged vector on either side) never occupies a top-k slot
@@ -615,7 +615,7 @@ def embedding_near_duplicates(
         F.col(id_col).alias("vid"),
         F.col(vec_col).alias("vec"),
         _rh_signature(vec_col, planes).alias("bucket"),
-    ).withColumn("_n", l2_norm(F.col("vec")))
+    ).withColumn("_n", l2_norm("vec"))
     a = d.select(
         "vid",
         "vec",
@@ -640,7 +640,7 @@ def embedding_near_duplicates(
             F.col("a.vid").alias("id_a"),
             F.col("b.vid").alias("id_b"),
             (
-                dot(F.col("a.vec"), F.col("b.vec"))
+                dot("a.vec", "b.vec")
                 / (F.col("a._n") * F.col("b._n"))
             ).alias("cos"),
         )

@@ -3069,19 +3069,19 @@ def flat_sales_export(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(sn), F.col("s_nationkey") == F.col("s_nk"))
         .join(p, F.col("l_partkey") == p["p_partkey"])
     )
-    # Round-15 (verdict task #6, A/B plans/r15/AB_flat_sales_twolevel
-    # .json): the two exact countDistincts used to plan as Expand(x3) -
-    # every joined fact row materialized three times before the partial
-    # aggregate. Split instead into three aggregation branches over the
-    # SAME flat join (scan/broadcast stages reused at runtime by AQE):
-    # plain stats, distinct (region, brand, custkey), distinct
-    # (region, brand, suppkey), each with map-side partial aggregation,
-    # joined on the 125-row group key. count(key) at level 2 skips the
-    # NULL-key level-1 row exactly as countDistinct ignores NULLs, and
-    # all three branches aggregate the same join so the group sets are
-    # identical (inner joins exact). Interleaved min-of-3: sf0.1
-    # 2.62 -> 1.75s (-33%), sf10 34.4 -> 21.2s (-38%), sf1 within the
-    # noise band (+5% on mins); parity TRUE x3.
+    # The two exact countDistincts are three aggregation branches over
+    # the SAME flat join (scan/broadcast stages reused at runtime by
+    # AQE), not one Expand(x3) aggregate that materializes every joined
+    # fact row three times: plain stats, distinct (region, brand,
+    # custkey) and distinct (region, brand, suppkey), each with map-side
+    # partial aggregation, then unioned and grouped once more on the
+    # group key (measurements in OPTIMIZATION_r15.md section 3).
+    # Equivalence: count(key) at level 2 skips the NULL-key level-1 row
+    # exactly as countDistinct ignores NULLs, and all three branches
+    # aggregate the same join, so their group sets are identical and
+    # each group's max() picks the one branch row that carries a
+    # column. Grouping, unlike an equality join, keeps a NULL group key
+    # (a part without a brand), as the oracle's GROUP BY does.
     gb = [F.col("r_name").alias("region"), F.col("p_brand").alias("brand")]
     base = flat.groupBy(*gb).agg(
         F.count("*").alias("n_rows"),
@@ -3099,13 +3099,13 @@ def flat_sales_export(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("region", "brand")
         .agg(F.count("l_suppkey").alias("n_suppliers"))
     )
+
+    cols = ("n_rows", "revenue_e4", "n_customers", "n_suppliers")
     return (
-        base.join(cust, on=["region", "brand"])
-        .join(supp, on=["region", "brand"])
-        .select(
-            "region", "brand", "n_rows", "revenue_e4",
-            "n_customers", "n_suppliers",
-        )
+        base.unionByName(cust, allowMissingColumns=True)
+        .unionByName(supp, allowMissingColumns=True)
+        .groupBy("region", "brand")
+        .agg(*(F.max(c).alias(c) for c in cols))
     )
 
 

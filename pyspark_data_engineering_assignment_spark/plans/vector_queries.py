@@ -151,7 +151,7 @@ def embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     return emb.select(
         "vec_id",
         "label",
-        l2_norm(F.col("embedding")).alias("l2_norm"),
+        l2_norm("embedding").alias("l2_norm"),
         F.size("embedding").alias("dim"),
     )
 

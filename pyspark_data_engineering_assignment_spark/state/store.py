@@ -14,6 +14,14 @@ counter = counter + EXCLUDED.counter`` (reference ``Mechanism Y.py:136-206``,
     O(|state|) - the same file-pruning a Delta ``MERGE`` gets from data
     skipping, and what makes the store survive 100 TB state with
     localized batches;
+  * buckets are **sized by bytes**: a new table starts with one bucket,
+    and a merge that leaves a bucket larger than 4 MB (Spark's default
+    per-file open cost, ``spark.sql.files.openCostInBytes``) doubles the
+    bucket count until it would fit. A bucket below that size is
+    cheaper to scan together with its neighbours than to open alone, so
+    small state is one file per table, while a large table keeps
+    buckets of at most about that size and merges keep rewriting only
+    the touched ones;
   * bucket versions are immutable parquet snapshots with an atomically
     swapped pointer file - readers never see a partial write;
   * merges are **idempotent by batch_id**: replaying a micro-batch after a
@@ -137,7 +145,14 @@ class StateStore(Protocol):
 
 class ParquetStateStore:
     """Hash-bucketed versioned-parquet state store with atomic pointer
-    swap and bucket-pruned merges."""
+    swap and bucket-pruned merges.
+
+    ``n_buckets`` is the bucket count a NEW table starts with (default
+    1); a table that already exists keeps the count stored in its
+    pointer. Merges grow the count by powers of two whenever a written
+    bucket exceeds ``_SPLIT_BYTES`` (4 MB), so buckets stay worth a
+    file each: 1.0 MB of state is one bucket, 100 MB about 32.
+    ``rebucket`` sets the count explicitly (e.g. to shrink)."""
 
     # Merges to DIFFERENT tables may run from concurrent driver threads:
     # each table has its own pointer file and snapshot dirs, and Spark's
@@ -145,7 +160,12 @@ class ParquetStateStore:
     # connection is not thread-safe, leaves this False.)
     supports_concurrent_merges = True
 
-    def __init__(self, spark: SparkSession, root: str, n_buckets: int = 16) -> None:
+    # The bucket-split target: Spark's default estimate, in bytes, of
+    # what opening one file costs (spark.sql.files.openCostInBytes). A
+    # bucket below it is cheaper to scan with its neighbours than alone.
+    _SPLIT_BYTES = 4 << 20
+
+    def __init__(self, spark: SparkSession, root: str, n_buckets: int = 1) -> None:
         self.spark = spark
         self.root = root
         self.n_buckets = n_buckets
@@ -403,11 +423,11 @@ class ParquetStateStore:
         return removed
 
     def rebucket(self, spec: StateTableSpec, new_n_buckets: int) -> int:
-        """Migrate the table to a different hash-bucket count - the
-        documented path for a key-cardinality jump (SCALING.md known
-        limit: bucket count was fixed at table creation; a 100x key
-        jump needs more buckets for merge pruning to keep per-batch
-        I/O localized, and a shrink compacts an over-bucketed table).
+        """Migrate the table to a different hash-bucket count. Growth
+        is automatic (a merge that writes a bucket over the split target
+        calls this under its lock), so the explicit call is for
+        shrinking: a table whose state shrank, e.g. after a key purge,
+        compacts into fewer files.
 
         One full read -> re-hash -> one atomically-swapped new version:
         the same pointer dance as a merge, so concurrent READERS are
@@ -569,7 +589,10 @@ class ParquetStateStore:
 
         I/O: reads and rewrites only the hash buckets that contain keys
         present in the batch; every other bucket keeps its current
-        snapshot version untouched.
+        snapshot version untouched. If a rewritten bucket ends up over
+        the split target, the same locked call then rebuckets the table
+        to a larger power-of-two multiple (one full rewrite, amortized
+        by the doubling).
 
         Concurrency: the whole merge - replay check, snapshot write,
         pointer swap - holds the per-table writer lock, so two writers
@@ -659,3 +682,26 @@ class ParquetStateStore:
             self._mark_unreferenced(spec.name, pointer["versions"], touched)
         finally:
             batch_side.unpersist()
+        self._split_oversized_locked(spec, out, touched, n_buckets)
+
+    def _split_oversized_locked(self, spec, out, written, n_buckets) -> None:
+        """Grow the bucket count when a bucket this merge wrote (the
+        ``_bucket=`` dirs under ``out``) is larger than the split
+        target: rebucket to the smallest power-of-two multiple of
+        ``n_buckets`` that brings the largest one under it, assuming the
+        hash spreads its keys evenly. A multiple of the old count splits
+        each bucket b into buckets congruent to b modulo the old count,
+        and doubling keeps the full rewrites amortized."""
+        largest = max(
+            sum(
+                e.stat().st_size
+                for e in os.scandir(os.path.join(out, f"_bucket={b}"))
+                if e.is_file()
+            )
+            for b in written
+        )
+        factor = 1
+        while largest > self._SPLIT_BYTES * factor:
+            factor *= 2
+        if factor > 1:
+            self._rebucket_locked(spec, n_buckets * factor)

@@ -196,3 +196,43 @@ def test_every_tpch_oracle_agrees_on_corrupt_star(spark, corrupt_tpch_sf):
         )
     finally:
         con.close()
+
+
+def test_flat_sales_export_keeps_a_null_brand_group(spark, tmp_path):
+    """A sold part with no brand makes a (region, NULL) group: the
+    oracle's GROUP BY keeps it, so the Spark plan must assemble its
+    three aggregation branches without an equality join on the key."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pyspark_data_engineering_assignment_spark.plans import QUERIES
+    from tests.oracle_harness import compare_query
+
+    for t in TPCH - {"part"}:
+        shutil.copy(f"{SF}/{t}.parquet", str(tmp_path / f"{t}.parquet"))
+    sold = pq.read_table(f"{SF}/lineitem.parquet").column("l_partkey")[0].as_py()
+    pt = pq.read_table(f"{SF}/part.parquet")
+    prows = [
+        {**r, "p_brand": None} if r["p_partkey"] == sold else r
+        for r in pt.to_pylist()
+    ]
+    pq.write_table(pa.Table.from_pylist(prows, schema=pt.schema),
+                   str(tmp_path / "part.parquet"))
+
+    spec = QUERIES["flat_sales_export"]
+    con = duckdb.connect()
+    for t in TPCH:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM '{tmp_path}/{t}.parquet'"
+        )
+    try:
+        null_groups = con.execute(
+            f"SELECT count(*) FROM ({spec.local_oracle}) WHERE brand IS NULL"
+        ).fetchone()[0]
+        assert null_groups >= 1
+        ok, msg = compare_query(spark, con, spec.fn, spec.local_oracle, str(tmp_path))
+        assert ok, msg
+    finally:
+        con.close()

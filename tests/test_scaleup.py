@@ -155,7 +155,7 @@ def test_embedding_copies_not_near_duplicates(spark, scaled):
     aligned = (
         a.join(b, F.col("a.src_id") == F.col("b.src_id"))
         .select(
-            cosine(F.col("a.embedding"), F.col("b.embedding")).alias("cos")
+            cosine("a.embedding", "b.embedding").alias("cos")
         )
         .filter(F.col("cos") >= 0.9)
         .count()
@@ -172,9 +172,9 @@ def test_embedding_copies_not_near_duplicates(spark, scaled):
         .select(
             (
                 F.abs(
-                    l2_norm(F.col("a.embedding")) - l2_norm(F.col("b.embedding"))
+                    l2_norm("a.embedding") - l2_norm("b.embedding")
                 )
-                / l2_norm(F.col("a.embedding"))
+                / l2_norm("a.embedding")
             ).alias("d")
         )
         .agg(F.max("d"))
@@ -211,7 +211,7 @@ def test_embedding_sign_flip_period_follows_actual_dim(spark):
     ).select((F.col("vec_id") - dim * stride).alias("v"), F.col("embedding").alias("eb"))
     cos_rows = (
         a.join(b, on="v")
-        .select(cosine(F.col("ea"), F.col("eb")).alias("cos"))
+        .select(cosine("ea", "eb").alias("cos"))
         .collect()
     )
     assert cos_rows, "no same-source (copy0, copy-dim) pairs found"

@@ -375,6 +375,74 @@ def test_rh_signature_matches_python_fold_bit_for_bit(spark):
     assert len({want[i] for i in range(N_CORPUS)}) > N_CORPUS // 2
 
 
+def _python_dot(a, b):
+    """Plain-Python sequential left fold of float64 products from 0.0,
+    with Spark's edge semantics: a NULL vector, a NULL element or a
+    length mismatch (zip_with pads with NULL) makes the dot NULL."""
+    if a is None or b is None or len(a) != len(b) or None in a + b:
+        return None
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc = acc + _f32(x) * _f32(y)
+    return acc
+
+
+def _bits(v):
+    if v is None:
+        return None
+    return "nan" if math.isnan(v) else struct.pack("d", v)
+
+
+def test_vector_functions_match_python_fold_bit_for_bit(spark):
+    """dot, l2_norm and cosine equal a plain-Python sequential fold bit
+    for bit, on random vectors and on every degenerate vector shape."""
+    from pyspark_data_engineering_assignment_spark.functions.vectors import (
+        cosine,
+        dot,
+        l2_norm,
+    )
+
+    vecs = _vectors()
+    half = [0.5] * DIM
+    rows = [(i, v, vecs[(i + 1) % N_CORPUS][1]) for i, v in vecs]
+    rows += [
+        (1000, None, half),  # NULL vector
+        (1001, half[:3] + [float("nan")] + half[4:], half),  # NaN element
+        (1002, half[:3] + [None] + half[4:], half),  # NULL element
+        (1003, half[: DIM - 4], half),  # ragged (short)
+        (1004, half, half[: DIM - 4]),  # ragged (long)
+    ]
+    schema = StructType(
+        [
+            StructField("id", LongType(), False),
+            StructField("a", ArrayType(FloatType()), True),
+            StructField("b", ArrayType(FloatType()), True),
+        ]
+    )
+    df = spark.createDataFrame(rows, schema)
+    got = {
+        r["id"]: (_bits(r["d"]), _bits(r["n"]), _bits(r["c"]))
+        for r in df.select(
+            "id",
+            dot("a", "b").alias("d"),
+            l2_norm("a").alias("n"),
+            cosine("a", "b").alias("c"),
+        ).collect()
+    }
+
+    def want(a, b):
+        d, aa, bb = _python_dot(a, b), _python_dot(a, a), _python_dot(b, b)
+        n = None if aa is None else math.sqrt(aa)
+        c = None if None in (d, aa, bb) else d / (math.sqrt(aa) * math.sqrt(bb))
+        return _bits(d), _bits(n), _bits(c)
+
+    assert got == {i: want(a, b) for i, a, b in rows}
+    assert got[1000] == (None, None, None)
+    assert got[1001] == ("nan", "nan", "nan")
+    assert got[1002] == (None, None, None)
+    assert got[1003][0] is None and got[1003][1] is not None
+
+
 def test_rh_signature_plan_holds_planes_as_one_literal(spark, emb):
     """All planes reach the optimized plan as ONE folded array literal
     inside one transform - not one literal and one CASE WHEN per plane

@@ -555,3 +555,128 @@ def test_vacuum_retention0_spares_fresh_temporary_dir(spark, tmp_path):
     os.makedirs(bare)
     store.vacuum(MERCHANT_SUMMARY, retention_seconds=0)
     assert not os.path.exists(bare)
+
+
+def _last_merge_buckets(store, spec):
+    """The ``_bucket=`` dirs the latest write created (its ``v=`` dir)."""
+    import os
+
+    version = store._read_pointer(spec.name)["next_version"] - 1
+    vdir = os.path.join(store.root, spec.name, f"v={version}")
+    return sorted(d for d in os.listdir(vdir) if d.startswith("_bucket="))
+
+
+def test_default_store_writes_one_bucket_per_table_per_merge(spark, tmp_path):
+    """A new table starts with one bucket: state far below the split
+    target (``ParquetStateStore._SPLIT_BYTES``, 4 MB) is one
+    file set per table, so each merge writes one ``_bucket=`` dir per
+    touched table instead of one per hash bucket."""
+    store = ParquetStateStore(spark, str(tmp_path / "state"))
+    for bid in range(2):
+        store.merge_batch(
+            MERCHANT_SUMMARY,
+            spark.createDataFrame(
+                [(f"M{i}", 1) for i in range(50)], MERCHANT_AGG_SCHEMA
+            ),
+            batch_id=bid,
+            now=NOW,
+        )
+        store.merge_batch(
+            CUSTOMER_MERCHANT_SUMMARY,
+            spark.createDataFrame(
+                [(f"C{i}", f"M{i % 7}", 1, Decimal("1.50")) for i in range(50)],
+                CM_AGG_SCHEMA,
+            ),
+            batch_id=bid,
+            now=NOW,
+        )
+        for spec in (MERCHANT_SUMMARY, CUSTOMER_MERCHANT_SUMMARY):
+            assert _last_merge_buckets(store, spec) == ["_bucket=0"], spec.name
+            assert store._read_pointer(spec.name)["n_buckets"] == 1
+    assert merchant_state(store) == {f"M{i}": 2 for i in range(50)}
+    assert cm_state(store)[("C7", "M0")] == (2, Decimal("3.00"))
+
+
+def test_merge_splits_a_bucket_grown_past_the_open_cost(spark, tmp_path):
+    """A merge that leaves a bucket over the split target rebuckets the
+    table under its lock to a power-of-two multiple of the old count.
+    The content stays bit-identical to a store born at the final count,
+    the replay guard and batch_meta carry over, and replaying the batch
+    that triggered the growth is a no-op."""
+    grown = ParquetStateStore(spark, str(tmp_path / "grown"))
+    grown._SPLIT_BYTES = 2048  # a few hundred rows pass it
+    b0 = spark.createDataFrame(
+        [(f"C{i}", f"M{i % 5}", 1, Decimal(f"{i}.25")) for i in range(10)],
+        CM_AGG_SCHEMA,
+    )
+    b1 = spark.createDataFrame(
+        [(f"C{i}", f"M{i % 9}", 2, Decimal(f"{i}.10")) for i in range(400)],
+        CM_AGG_SCHEMA,
+    )
+    spec = CUSTOMER_MERCHANT_SUMMARY
+    grown.merge_batch(spec, b0, batch_id=0, now=NOW)
+    assert grown._read_pointer(spec.name)["n_buckets"] == 1  # under target
+    grown.merge_batch(spec, b1, batch_id=1, now=NOW, meta={"n": 11})
+    n = grown._read_pointer(spec.name)["n_buckets"]
+    assert n >= 2 and n & (n - 1) == 0, n
+    assert grown.last_batch_id(spec) == 1
+    assert grown.batch_meta(spec, 1) == {"n": 11}
+
+    born = ParquetStateStore(spark, str(tmp_path / "born"), n_buckets=n)
+    born.merge_batch(spec, b0, batch_id=0, now=NOW)
+    born.merge_batch(spec, b1, batch_id=1, now=NOW, meta={"n": 11})
+    assert born._read_pointer(spec.name)["n_buckets"] == n
+    after = _full_rows(grown, spec)
+    assert after == _full_rows(born, spec)
+    assert grown.bucket_versions(spec).keys() == born.bucket_versions(spec).keys()
+
+    # replaying the growth-triggering batch changes nothing
+    grown.merge_batch(spec, b1, batch_id=1, now=NOW, meta={"n": 99})
+    assert _full_rows(grown, spec) == after
+    assert grown._read_pointer(spec.name)["n_buckets"] == n
+    assert grown.batch_meta(spec, 1) == {"n": 11}
+
+
+def test_explicit_bucket_count_below_target_never_changes(spark, tmp_path):
+    store = ParquetStateStore(spark, str(tmp_path / "state"), n_buckets=4)
+    for bid in range(3):
+        store.merge_batch(
+            MERCHANT_SUMMARY,
+            spark.createDataFrame(
+                [(f"M{bid}_{i}", i) for i in range(100)], MERCHANT_AGG_SCHEMA
+            ),
+            batch_id=bid,
+            now=NOW,
+        )
+        assert store._read_pointer(MERCHANT_SUMMARY.name)["n_buckets"] == 4
+    assert len(store.bucket_versions(MERCHANT_SUMMARY)) == 4
+
+
+def test_table_written_with_16_buckets_keeps_its_layout(spark, tmp_path):
+    """A state directory from a store that created its tables with 16
+    buckets (the former default) is read and merged unchanged by a
+    default store: the count lives in the table's pointer, and a merge
+    still rewrites only the touched bucket."""
+    root = str(tmp_path / "state")
+    old = ParquetStateStore(spark, root, n_buckets=16)
+    old.merge_batch(
+        MERCHANT_SUMMARY,
+        spark.createDataFrame([(f"M{i}", 1) for i in range(64)], MERCHANT_AGG_SCHEMA),
+        batch_id=0,
+        now=NOW,
+    )
+    before = old.bucket_versions(MERCHANT_SUMMARY)
+    assert len(before) == 16
+
+    store = ParquetStateStore(spark, root)
+    assert merchant_state(store) == {f"M{i}": 1 for i in range(64)}
+    store.merge_batch(
+        MERCHANT_SUMMARY,
+        spark.createDataFrame([("M0", 5)], MERCHANT_AGG_SCHEMA),
+        batch_id=1,
+        now=NOW,
+    )
+    after = store.bucket_versions(MERCHANT_SUMMARY)
+    assert store._read_pointer(MERCHANT_SUMMARY.name)["n_buckets"] == 16
+    assert sum(1 for b in after if after[b] != before[b]) == 1
+    assert merchant_state(store)["M0"] == 6
